@@ -449,17 +449,21 @@ def bpe_merges_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The MapReduce chain per round: pair-count aggregation over the
     (distinct-word, frequency) table, a deterministic argmax
-    (count desc, pair asc — TakeOrdered, never a full sort), and a
-    broadcast-join rewrite applying the merge to every sequence. Iteration
-    state is the vocabulary-sized word table, NOT the corpus: the corpus is
-    scanned once for word counts and never again — this is why BPE training
-    scales to 100 TB (the loop runs over ~10⁵ distinct words however big
-    the input).
+    (count desc, pair asc — TakeOrdered, never a full sort) collected to
+    the driver as one row, and a literal ``replace`` applying the merge to
+    every sequence. Iteration state is the vocabulary-sized word table, NOT
+    the corpus: the corpus is scanned once for word counts and never again
+    — this is why BPE training scales to 100 TB (the loop runs over ~10⁵
+    distinct words however big the input). The word table is materialized
+    once and released on every exit; each round's merges are narrow
+    projections over it, and the returned merge table is a local relation
+    of the collected winners, so the call leaves no block pinned.
 
     Merge semantics are greedy non-overlapping left-to-right within a
     round (both engines' ``replace``), which diverges from per-occurrence
     BPE only on immediately-adjacent repeats of the same pair — absent
-    from this corpus and rare in natural text.
+    from this corpus and rare in natural text. A round with no pair left
+    ends the loop (every later round would be empty too).
 
     The DuckDB twin unrolls the same rounds as chained CTEs, so the whole
     iterative computation is value-hash checked.
@@ -471,65 +475,47 @@ def bpe_merges_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    words = wc.select(
+    vocab = wc.select(
         F.trim(F.regexp_replace("word", "(.)", "$1 ")).alias("seq"), "n"
-    )
-    merges = None
-    prev_words = None
-    for r in range(1, _BPE_ROUNDS + 1):
-        toks = F.split("seq", " ")
-        pairs = (
-            # single-symbol sequences yield no pairs; filtering them also
-            # guards Spark's sequence(1, 0), which counts DOWN when start>stop
-            words.filter(F.size(toks) > 1)
-            .select(
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(toks) - 1),
-                        lambda i: F.concat_ws(
-                            " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-                        ),
-                    )
-                ).alias("pair"),
-                "n",
+    ).localCheckpoint()
+    try:
+        words, merges = vocab, []
+        for r in range(1, _BPE_ROUNDS + 1):
+            toks = F.split("seq", " ")
+            best = (
+                # single-symbol sequences yield no pairs; filtering them also
+                # guards Spark's sequence(1, 0), which counts DOWN when start>stop
+                words.filter(F.size(toks) > 1)
+                .select(
+                    F.explode(
+                        F.transform(
+                            F.sequence(F.lit(1), F.size(toks) - 1),
+                            lambda i: F.concat_ws(
+                                " ", F.element_at(toks, i), F.element_at(toks, i + 1)
+                            ),
+                        )
+                    ).alias("pair"),
+                    "n",
+                )
+                .groupBy("pair")
+                .agg(F.sum("n").alias("c"))
+                .orderBy(F.desc("c"), F.asc("pair"))
+                .first()
             )
-            .groupBy("pair")
-            .agg(F.sum("n").alias("c"))
-        )
-        best = (
-            pairs.orderBy(F.desc("c"), F.asc("pair"))
-            .limit(1)
-            .select(
-                F.lit(r).cast("int").alias("round"),
-                "pair",
-                F.col("c").alias("pair_count"),
+            if best is None:
+                break
+            merges.append((r, best.pair, best.c))
+            merged = F.replace(
+                F.concat(F.lit(" "), "seq", F.lit(" ")),
+                F.lit(f" {best.pair} "),
+                F.lit(f" {best.pair.replace(' ', '')} "),
             )
-            # pin the 1-row winner: computed once (not re-derived by both
-            # its consumers), and the returned merges union then reads ONLY
-            # these tiny checkpoints — which is what lets the vocabulary-
-            # sized per-round word tables below be released as they are
-            # superseded instead of accumulating for the session
-            .localCheckpoint()
+            words = words.select(F.trim(merged).alias("seq"), "n")
+        return spark.createDataFrame(
+            merges, "round int not null, pair string not null, pair_count bigint"
         )
-        merges = best if merges is None else merges.unionByName(best)
-        words = (
-            words.crossJoin(F.broadcast(best.select("pair")))
-            .withColumn(
-                "seq",
-                F.trim(
-                    F.expr(
-                        "replace(' ' || seq || ' ', ' ' || pair || ' ', "
-                        "' ' || replace(pair, ' ', '') || ' ')"
-                    )
-                ),
-            )
-            .select("seq", "n")
-            .localCheckpoint()  # truncate per-round lineage, same as CC/BFS
-        )
-        release_local_checkpoint(prev_words)  # superseded round: unreferenced
-        prev_words = words
-    release_local_checkpoint(prev_words)  # merges reads only the best ckpts
-    return merges
+    finally:
+        release_local_checkpoint(vocab)
 
 
 @query(

@@ -7,6 +7,12 @@ deterministic across environments. Shuffle partitions default to the local
 core count for test scale; on a real cluster this is overridden via
 ``SPARK_SHUFFLE_PARTITIONS`` (rule of thumb: 2-3x total executor cores, and
 AQE coalesces the excess).
+
+Python workers fork from ``worker_daemon`` (``spark.python.daemon.module``),
+so a task no longer re-reads ``pyspark.zip`` and the ``spark-core`` jar on
+Python 3.10-3.12. On a cluster the package must be installed in the executor
+Python environment: ``--py-files`` archives join ``sys.path`` per task, after
+the daemon has started.
 """
 
 from __future__ import annotations
@@ -35,7 +41,13 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Python workers fork from the engine daemon (worker_daemon.py), which
+    # stops every task re-reading the zip archives on the workers' sys.path.
+    "spark.python.daemon.module": "cbde_mapreduce_spark.worker_daemon",
 }
+
+#: The package's parent directory; Python workers import the daemon from it.
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: Everything we want on a fresh session.
 RUNTIME_CONF: dict[str, str] = {**REQUIRED_CONF, **DEFAULT_CONF}
@@ -83,6 +95,9 @@ def get_spark(
         # before any cleanup fires. 2min keeps the shared local JVM drained;
         # on a real cluster it is a no-op cost (one driver System.gc()).
         .config("spark.cleaner.periodicGC.interval", "2min")
+        # workers start in the JVM's cwd: put the daemon's package on their
+        # path wherever the session starts
+        .config("spark.executorEnv.PYTHONPATH", _PKG_ROOT)
     )
     for key, value in RUNTIME_CONF.items():
         builder = builder.config(key, value)

@@ -6,8 +6,8 @@ accumulate every ROUND's superseded state (observed OOMing a 25-heavy-query
 session at position ~22 while each query passed in isolation, ROTATION.md
 round-6 closing re-probe). These tests pin the fix: each loop releases a
 round's checkpoint as soon as the next materializes, so one query leaves
-behind at most its FINAL state (plus, for BPE, its 1-row-per-round merge
-winners which back the returned plan).
+behind at most its FINAL state (BPE: nothing — its merge table is a local
+relation of the collected winners).
 """
 
 from __future__ import annotations
@@ -66,15 +66,15 @@ def test_connected_components_leave_one_round_of_state(spark):
 def test_iterative_queries_leave_bounded_state(spark, sf_smoke):
     """Registry-level sweep of every per-round-checkpointing iterative
     query: after collect(), at most the documented live state remains —
-    the final round's table (BFS/PPR/SSSP/CC) or the 1-row-per-round merge
-    winners (BPE) — never one block-set per round per table."""
+    the final round's table (BFS/PPR/SSSP/CC), none for BPE — never one
+    block-set per round per table."""
     budgets = {
         "bfs_hops_trade_graph": 1,  # final visited; edge ckpt released
         "ppr_trade_recommendations": 1,  # final ranks; edge ckpt released
         "sssp_trade_graph": 1,  # final dist; edge ckpt released
         "neardup_components": 1,  # final CC labels
         "neardup_components_star": 1,  # final star forest
-        "bpe_merges_vocab": 3,  # _BPE_ROUNDS 1-row winners back the result
+        "bpe_merges_vocab": 0,  # vocabulary released; merges are a local relation
     }
     for name, budget in budgets.items():
         before = _n_persistent(spark)
