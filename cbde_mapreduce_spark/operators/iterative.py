@@ -25,10 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cbde_mapreduce_spark.operators.ckpt import (
-    persist_disk,
-    release_local_checkpoint,
-)
+from cbde_mapreduce_spark.operators.loop import DATA_SIZED, RoundState
 
 ASSIGN_SCHEMA = "vec_id bigint, cluster int, dist double"
 
@@ -218,42 +215,27 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
     At 100 TB use large-star/small-star (Kiveris et al.) to bound round
     count; min-label propagation converges in O(diameter) rounds, which is
     small for near-dup graphs (tight clusters).
+
+    Loop state (operators/loop.py): the symmetrized edge set is a
+    data-sized invariant laid out on the propagation join key, so no round
+    re-derives the caller's upstream pair pipeline or re-shuffles |E|.
+    The label table is checkpointed per round: a lineage-keeping persist
+    was measured 1.15-1.22× slower here, because each round reads the
+    labels twice and the kept lineage embeds the upstream plan 2^r times
+    (OPTIMIZATION_r13, CC adjudication).
     """
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).distinct()
-    # Materialize the symmetrized edge set ONCE, laid out on the
-    # propagation join key (r12 optimization): every fixpoint round is its
-    # own ACTION, so the un-materialized sym re-derived the caller's ENTIRE
-    # upstream pair pipeline (LSH banding, candidate verification, rep
-    # expansion — the expensive part of dedup_canonical/neardup_components)
-    # per round, then re-shuffled it for the join. persist_disk keeps the
-    # partitioning+ordering under AQE (see operators/ckpt.py), so each
-    # round's neighbor join is also exchange-free and sort-free on the |E|
-    # side — the per-round cost drops to the vertex-sized label shuffle.
-    sym = persist_disk(sym.repartition("b").sortWithinPartitions("b", "a"))
-    labels = sym.select(F.col("a").alias("v")).distinct().withColumn(
-        "label", F.col("v")
-    )
-    # Per-round state mechanism — MEASURED in r13 and kept on
-    # localCheckpoint (VERDICT r12 ask #2 adjudication): the persisted-
-    # state layout that pays off in SSSP/PPR (operators/ckpt.py::
-    # persist_mem, pinned by tests/test_optimization_r13.py) was tried
-    # here and read 1.15-1.22× SLOWER cold at sf10 on the CC consumers.
-    # Two structural reasons, both CC-specific: (1) each round references
-    # `labels` twice (neighbor join + left join), so a lineage-keeping
-    # persist embeds the caller's ENTIRE upstream pair pipeline plan 2^r
-    # times in round-r driver analysis — the checkpoint's truncation is
-    # what keeps round plans flat; (2) the exchange the layout would
-    # remove moves the LABEL table, which is distinct-entity-sized and
-    # broadcast-small in every dedup regime (it does not grow with corpus
-    # replication), so there is no per-round vertex shuffle to remove
-    # until labels outgrow the broadcast threshold. If a workload ever
-    # runs CC with a non-broadcastable label table, persist_mem +
-    # periodic truncation is the measured-and-shelved alternative
-    # (OPTIMIZATION_r13.md).
-    prev_ckpt = None
-    try:
+    with RoundState() as rs:
+        sym = rs.invariant(
+            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+            .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+            .distinct()
+            .repartition("b")
+            .sortWithinPartitions("b", "a"),
+            DATA_SIZED,
+        )
+        labels = sym.select(F.col("a").alias("v")).distinct().withColumn(
+            "label", F.col("v")
+        )
         while True:
             # label(v) <- min(label(v), min over neighbors u of label(u))
             neighbor_min = (
@@ -261,9 +243,8 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
                 .groupBy(F.col("a").alias("v2"))
                 .agg(F.min("label").alias("nbr_label"))
             )
-            updated = (
-                labels.join(neighbor_min, labels.v == F.col("v2"), "left")
-                .select(
+            updated = rs.advance(
+                labels.join(neighbor_min, labels.v == F.col("v2"), "left").select(
                     "v",
                     F.least(
                         F.col("label"), F.coalesce("nbr_label", F.col("label"))
@@ -271,23 +252,10 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
                     (F.col("nbr_label") < F.col("label")).alias("changed"),
                 )
             )
-            updated = updated.localCheckpoint()  # truncate the growing lineage
-            # the previous round's checkpoint has no live reader once this
-            # round's has materialized (eager) — release its blocks so a
-            # long session holds one round of state, not every round's
-            release_local_checkpoint(prev_ckpt)
-            prev_ckpt = updated
             n_changed = updated.filter(F.col("changed")).count()
             labels = updated.select("v", "label")
             if n_changed == 0:
-                # the FINAL checkpoint backs the returned plan: keep it live
                 return labels.select("v", F.col("label").alias("component"))
-    finally:
-        # ADVICE r12: release the edge blocks on EVERY exit — the normal
-        # convergence return (the returned plan reads the label state, not
-        # sym) and any mid-round exception/kill, which previously leaked
-        # the DISK_ONLY blocks for the session lifetime.
-        sym.unpersist()
 
 
 def connected_components_star(
@@ -348,25 +316,21 @@ def connected_components_star(
         .distinct()
     )
     prev_fp = None
-    prev_ckpt = None
-    for _ in range(max_rounds):
-        e = small_star(large_star(e)).localCheckpoint()
-        # round k-1's checkpoint is unreferenced once round k materializes
-        # (the final round's backs the returned star forest: kept live)
-        release_local_checkpoint(prev_ckpt)
-        prev_ckpt = e
-        fp = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal(38,0) sum: exact, no ANSI long-overflow on hash sums
-            F.coalesce(
-                F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        if (fp.n, fp.h) == prev_fp:
-            break
-        prev_fp = (fp.n, fp.h)
-    else:
-        raise RuntimeError(f"star CC did not converge in {max_rounds} rounds")
+    with RoundState() as rs:
+        for _ in range(max_rounds):
+            e = rs.advance(small_star(large_star(e)))
+            fp = e.agg(
+                F.count(F.lit(1)).alias("n"),
+                # decimal(38,0) sum: exact, no ANSI long-overflow on hash sums
+                F.coalesce(
+                    F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")), F.lit(0)
+                ).alias("h"),
+            ).collect()[0]
+            if (fp.n, fp.h) == prev_fp:
+                break
+            prev_fp = (fp.n, fp.h)
+        else:
+            raise RuntimeError(f"star CC did not converge in {max_rounds} rounds")
     roots = e.select(F.col("b").alias("v")).distinct()
     members = e.select(F.col("a").alias("v"), F.col("b").alias("component"))
     return members.unionByName(

@@ -24,24 +24,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cbde_mapreduce_spark.operators.ckpt import (
-    persist_disk,
-    persist_mem,
-    release_local_checkpoint,
-)
-from cbde_mapreduce_spark.operators.gates import BCAST_MAX_ROWS as _BCAST_MAX_ROWS
+from cbde_mapreduce_spark.operators.gates import maybe_broadcast
+from cbde_mapreduce_spark.operators.loop import DATA_SIZED, KEY_SIZED, RoundState
 from cbde_mapreduce_spark.plans.registry import query
 from cbde_mapreduce_spark.sources import load_table
 
 DAMPING = 0.85
 N_ITERS = 3
 TOP_N = 20
-
-# Broadcast gate for ITERATIVE loops whose working set (frontier / reached
-# rank table) is data-sized in the worst case: broadcast only while the
-# measured per-round row count stays under operators/gates.py::
-# BCAST_MAX_ROWS, else fall back to a shuffle join. The count is read off
-# the round's checkpoint blocks, so the gate costs one trivial job per round.
 
 def _encoded_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The symmetrized bipartite trade graph, shared by every builder that
@@ -247,58 +237,38 @@ def bfs_hops_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     three frontier-expansion rounds, reporting per-hop layer sizes.
 
     The iterative-join MR chain: each round is frontier ⋈ edges (one shuffle
-    on the frontier key) + anti-join against the visited set, with
-    localCheckpoint truncating lineage per round (same discipline as
-    operators/iterative.py::connected_components — without it the plan
-    doubles per round). The DuckDB twin unrolls the same rounds as chained
-    CTEs, so the iteration gets a full value-hash check.
+    on the frontier key) + anti-join against the visited set. The DuckDB
+    twin unrolls the same rounds as chained CTEs, so the iteration gets a
+    full value-hash check.
 
-    100 TB shape: frontier and visited are vertex-sized. The frontier is
-    broadcast only while it is MEASURED small (<= _BCAST_MAX_ROWS, checked
-    per round from the checkpointed visited set — the count reads storage
-    blocks, not lineage); past the gate it falls back to a shuffle join on
-    the edge's source endpoint, because on a power-law graph the hop-2/3
-    frontier can approach O(V), which must never be broadcast. Each round's
-    frontier is READ OFF the round's visited checkpoint (hop == k), so its
-    lineage is one block scan — not a recursive chain of every prior
-    round's join — and the superseded visited checkpoint is released as
-    soon as the next one materializes (operators/ckpt.py), bounding a long
-    session to one round of state per query.
+    Loop state (operators/loop.py): the edge set is a data-sized invariant
+    laid out on the frontier-join key, so a past-the-gate round joins it
+    with no exchange and no sort (OPTIMIZATION_r12 §2); visited is
+    checkpointed per round and each frontier is read off that checkpoint
+    (hop == k), one block scan rather than a chain of every prior round's
+    join. The frontier broadcasts only while its measured count is under
+    the gate (operators/gates.py): on a power-law graph the hop-2/3
+    frontier can approach O(V).
     """
-    e = (
-        _encoded_sym_edges(spark, sf_dir)
-        # partition+sort on the frontier-join key BEFORE materializing:
-        # persist (NOT localCheckpoint, which records UnknownPartitioning
-        # under AQE — operators/ckpt.py::persist_disk) keeps the layout, so
-        # each round past the broadcast gate joins the edge set with no
-        # exchange and no sort (r12 plan A/B); DISK_ONLY keeps the
-        # data-sized edge set off the unified memory pool
-        .repartition("a")
-        .sortWithinPartitions("a", "b")
-        .transform(persist_disk)
-    )
-    visited = spark.range(1).select(
-        F.lit(_BFS_SOURCE).cast("long").alias("v"), F.lit(0).alias("hop")
-    )
-    frontier = visited.select("v")
-    n_frontier = 1
-    prev_ckpt = None
-    for k in range(1, _BFS_ROUNDS + 1):
-        fr = F.broadcast(frontier) if n_frontier <= _BCAST_MAX_ROWS else frontier
-        nxt = (
-            e.join(fr, e.a == fr.v)
-            .select(F.col("b").alias("v"))
-            .distinct()
+    with RoundState() as rs:
+        e = rs.invariant(
+            _encoded_sym_edges(spark, sf_dir)
+            .repartition("a")
+            .sortWithinPartitions("a", "b"),
+            DATA_SIZED,
         )
-        new = nxt.join(visited, "v", "left_anti").withColumn("hop", F.lit(k))
-        visited = visited.unionByName(new).localCheckpoint()
-        release_local_checkpoint(prev_ckpt)  # round k-1's state: unreferenced
-        prev_ckpt = visited
-        # frontier re-read from THIS round's checkpoint: one block scan, no
-        # recursive per-round join chain; its count (cheap) drives the gate
-        frontier = visited.filter(F.col("hop") == k).select("v")
-        n_frontier = frontier.count()
-    e.unpersist()  # the returned plan reads only the final visited
+        visited = spark.range(1).select(
+            F.lit(_BFS_SOURCE).cast("long").alias("v"), F.lit(0).alias("hop")
+        )
+        frontier, n_frontier = visited.select("v"), 1
+        for k in range(1, _BFS_ROUNDS + 1):
+            fr = maybe_broadcast(frontier, n_frontier)
+            nxt = e.join(fr, e.a == fr.v).select(F.col("b").alias("v")).distinct()
+            new = nxt.join(visited, "v", "left_anti").withColumn("hop", F.lit(k))
+            visited = rs.advance(visited.unionByName(new))
+            frontier = visited.filter(F.col("hop") == k).select("v")
+            if k < _BFS_ROUNDS:  # the gate's count feeds the next round only
+                n_frontier = frontier.count()
     return visited.groupBy("hop").agg(
         F.count(F.lit(1)).alias("n_vertices"),
         F.min("v").alias("min_v"),
@@ -375,89 +345,47 @@ def ppr_trade_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pruned before the rounded top-20). Same per-round cost (one edge join
     + combinable sum); the rank table is only the reached neighborhood,
     SMALLER than global PageRank's — personalization is cheaper, not
-    dearer, at scale."""
-    e = (
-        _encoded_sym_edges(spark, sf_dir)
-        # partition+sort on the round join key before materializing: persist
-        # (NOT localCheckpoint — UnknownPartitioning under AQE, see
-        # operators/ckpt.py::persist_disk) keeps the layout, so deg's groupBy
-        # and every past-the-gate round join read the blocks with no
-        # exchange and no sort. DISK_ONLY: the edge set is data-sized; at
-        # the default storage level its blocks pin the memory pool and
-        # starve every later aggregation that scans it (SCALING.md r7)
-        .repartition("a")
-        .sortWithinPartitions("a", "b")
-        .transform(persist_disk)
-    )
-    deg = persist_mem(
-        e.groupBy("a").agg(F.count(F.lit(1)).cast("double").alias("d"))
-        # vertex-sized; materialized so the |E|-row aggregation runs ONCE,
-        # not inside every round's broadcast build. persist, NOT
-        # localCheckpoint (r13): the groupBy lays deg out on the round join
-        # key a, and the persisted relation KEEPS that layout under AQE, so
-        # the past-the-gate rank⋈deg join is exchange-free on the deg side
-        # (a checkpoint came back UnknownPartitioning and re-shuffled it
-        # every round).
-    )
-    deg.count()  # materialize (was: eager checkpoint)
-    ranks = spark.range(1).select(
-        F.lit(_PPR_SOURCE).cast("long").alias("v"), F.lit(1.0).alias("r")
-    )
-    teleport = F.when(F.col("v") == _PPR_SOURCE, F.lit(1.0 - DAMPING)).otherwise(
-        F.lit(0.0)
-    )
-    n_ranks = 1
-    prev_state = None
-    for i in range(N_ITERS):
-        # the reached rank table starts neighborhood-sized, so while it is
-        # MEASURED small (<= _BCAST_MAX_ROWS, counted off the previous
-        # round's checkpoint blocks) it BROADCASTS into both the degree
-        # lookup and the edge scan — one pass over deg + one over e per
-        # round, no re-shuffle of the (data-sized, checkpointed) edge set;
-        # without the hint the optimizer shuffled all |E| edges every
-        # iteration (~2.4B edge rows per measurement at 100× replication,
-        # SCALING.md r6). But after N hops of a dense power-law graph the
-        # reached set can approach O(V), which must never be broadcast:
-        # past the gate both joins fall back to shuffle-hash on the vertex
-        # key (the same per-round cost global PageRank pays).
-        small = n_ranks <= _BCAST_MAX_ROWS
-        ra = ranks.withColumnRenamed("v", "a")
-        rd = (
-            (F.broadcast(ra) if small else ra)
-            .join(deg, "a")
-            .select("a", (F.col("r") / F.col("d")).alias("c0"))
+    dearer, at scale.
+
+    Loop state (operators/loop.py): the edge set (data-sized) and the
+    degree table (vertex-sized) are invariants laid out on the round join
+    key a; intermediate rank tables keep their layout, so a past-the-gate
+    round's rank⋈deg and e⋈rd joins are exchange-free and the only
+    per-round exchange is the contribution groupBy (OPTIMIZATION_r13 §1).
+    The rank table broadcasts into both joins while its measured count is
+    under the gate (operators/gates.py), else both joins shuffle on the
+    vertex key — the per-round cost global PageRank pays."""
+    with RoundState(layout_rounds=N_ITERS) as rs:
+        e = rs.invariant(
+            _encoded_sym_edges(spark, sf_dir)
+            .repartition("a")
+            .sortWithinPartitions("a", "b"),
+            DATA_SIZED,
         )
-        contrib = e.join(F.broadcast(rd) if small else rd, "a").select(
-            F.col("b").alias("v"), F.col("c0").alias("c")
+        deg = rs.invariant(
+            e.groupBy("a").agg(F.count(F.lit(1)).cast("double").alias("d")),
+            KEY_SIZED,
         )
-        agg = contrib.groupBy("v").agg(
-            (teleport + F.lit(DAMPING) * F.sum("c")).alias("r")
+        deg.count()  # the |E|-row aggregation runs once, before round 1
+        ranks = spark.range(1).select(
+            F.lit(_PPR_SOURCE).cast("long").alias("v"), F.lit(1.0).alias("r")
         )
-        if i < N_ITERS - 1:
-            # INTERMEDIATE rounds persist, NOT localCheckpoint (r13, VERDICT
-            # r12 ask #2): the contribution groupBy lays each round's ranks
-            # out on the join key, and the persisted state KEEPS hash(v)
-            # under AQE, so the past-the-gate round joins (ranks⋈deg on a,
-            # e⋈rd on a) are exchange-free on every side — one irreducible
-            # vertex-sized exchange per round (the contribution groupBy
-            # itself). A checkpoint recorded UnknownPartitioning and
-            # re-shuffled the rank table every round.
-            ranks = persist_mem(agg)
-            n_ranks = ranks.count()  # gate measurement; materializes
-        else:
-            # the FINAL round truncates: the consumer is a filter+TakeOrdered
-            # (layout-indifferent), the returned plan stays one
-            # self-contained block scan, the eager checkpoint is the
-            # materializing action, and the gate has no next round to feed
-            ranks = agg.localCheckpoint()
-        if prev_state is not None:
-            prev_state.unpersist()  # superseded round: no live reader
-            prev_state = None
-        if i < N_ITERS - 1:
-            prev_state = ranks
-    # the returned plan reads only the final ranks checkpoint
-    e.unpersist()
-    deg.unpersist()
+        teleport = F.when(F.col("v") == _PPR_SOURCE, F.lit(1.0 - DAMPING)).otherwise(
+            F.lit(0.0)
+        )
+        n_ranks = 1
+        for _ in range(N_ITERS):
+            ra = maybe_broadcast(ranks.withColumnRenamed("v", "a"), n_ranks)
+            rd = ra.join(deg, "a").select("a", (F.col("r") / F.col("d")).alias("c0"))
+            contrib = e.join(maybe_broadcast(rd, n_ranks), "a").select(
+                F.col("b").alias("v"), F.col("c0").alias("c")
+            )
+            ranks = rs.advance(
+                contrib.groupBy("v").agg(
+                    (teleport + F.lit(DAMPING) * F.sum("c")).alias("r")
+                )
+            )
+            n_ranks = rs.rows
     return (
         ranks.select("v", F.round("r", 6).alias("ppr"))
         .filter(F.col("ppr") > 0)
@@ -517,10 +445,12 @@ def sssp_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fixed round count keeps the DuckDB twin an unrolled CTE so this
     iterative algorithm gets a full value-hash check; the
     converge-to-fixpoint variant adds only a scalar delta check per round
-    (operators/iterative.py::connected_components pattern). Edges are
-    materialized once, partitioned+sorted on the relaxation key, and reused
-    by every round (persist_disk — same rationale as BFS); dist tables stay
-    vertex-sized.
+    (operators/iterative.py::connected_components pattern).
+
+    Loop state (operators/loop.py): the edge set is a data-sized invariant
+    laid out on the relaxation key, and intermediate dist tables keep the
+    relaxation groupBy's layout, so the round's only exchange is that
+    groupBy (OPTIMIZATION_r13 §1); dist tables stay vertex-sized.
     """
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -533,56 +463,26 @@ def sssp_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
     w0 = l.select("a", "b", F.expr("(100 + cnt - 1) div cnt").alias("w"))
-    e = (
-        w0.unionByName(w0.select(F.col("b").alias("a"), F.col("a").alias("b"), "w"))
-        # partition+sort on the relaxation join key before materializing:
-        # persist (NOT localCheckpoint — UnknownPartitioning under AQE, see
-        # operators/ckpt.py::persist_disk) keeps the layout, so each of the
-        # 4 rounds joins the edge set with no exchange and no sort — the old
-        # layout re-shuffled all |E| rows every round (r12 plan A/B)
-        .repartition("a")
-        .sortWithinPartitions("a", "b")
-        .transform(persist_disk)  # DISK_ONLY: data-sized, keep off the memory pool
-    )
-    dist = spark.range(1).select(
-        F.lit(SSSP_SOURCE).cast("bigint").alias("v"),
-        F.lit(0).cast("bigint").alias("dist"),
-    )
-    prev_state = None
-    for i in range(SSSP_ROUNDS):
-        relaxed = e.join(dist.withColumnRenamed("v", "a"), "a").select(
-            F.col("b").alias("v"), (F.col("dist") + F.col("w")).alias("dist")
+    with RoundState(layout_rounds=SSSP_ROUNDS) as rs:
+        e = rs.invariant(
+            w0.unionByName(w0.select(F.col("b").alias("a"), F.col("a").alias("b"), "w"))
+            .repartition("a")
+            .sortWithinPartitions("a", "b"),
+            DATA_SIZED,
         )
-        agg = (
-            dist.unionByName(relaxed)
-            .groupBy("v")
-            .agg(F.min("dist").cast("bigint").alias("dist"))
+        dist = spark.range(1).select(
+            F.lit(SSSP_SOURCE).cast("bigint").alias("v"),
+            F.lit(0).cast("bigint").alias("dist"),
         )
-        if i < SSSP_ROUNDS - 1:
-            # INTERMEDIATE rounds persist, NOT localCheckpoint (r13, VERDICT
-            # r12 ask #2): the relaxation groupBy already lays each round's
-            # dist out on the join key, but a checkpoint records
-            # UnknownPartitioning under AQE, so the next round re-shuffled
-            # the vertex table into the edge join. The persisted state keeps
-            # hash(v), making the round's only exchange the irreducible
-            # relaxation groupBy (r13 probe: 2 exchanges/round -> 1 under
-            # production AQE; identical plan under the bench's AQE-off).
-            # Lineage grows one cached-plan layer per round, bounded by the
-            # fixed rounds; an evicted block recomputes, not fails.
-            dist = persist_mem(agg)
-            dist.count()  # materialize this round's blocks
-        else:
-            # the FINAL round truncates: nothing joins the result again (the
-            # consumer is a TakeOrdered, layout-indifferent), the returned
-            # plan stays one self-contained block scan, and the eager
-            # checkpoint is itself the materializing action
-            dist = agg.localCheckpoint()
-        if prev_state is not None:
-            prev_state.unpersist()  # superseded round: no live reader
-            prev_state = None
-        if i < SSSP_ROUNDS - 1:
-            prev_state = dist
-    e.unpersist()  # the returned plan reads only the final dist
+        for _ in range(SSSP_ROUNDS):
+            relaxed = e.join(dist.withColumnRenamed("v", "a"), "a").select(
+                F.col("b").alias("v"), (F.col("dist") + F.col("w")).alias("dist")
+            )
+            dist = rs.advance(
+                dist.unionByName(relaxed)
+                .groupBy("v")
+                .agg(F.min("dist").cast("bigint").alias("dist"))
+            )
     return dist.orderBy(F.asc("dist"), F.asc("v")).limit(SSSP_TOP)
 
 

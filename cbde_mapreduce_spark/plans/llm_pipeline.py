@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cbde_mapreduce_spark.functions.texttools import shingles, tokens
-from cbde_mapreduce_spark.operators.ckpt import release_local_checkpoint
+from cbde_mapreduce_spark.operators.loop import RoundState
 from cbde_mapreduce_spark.plans.registry import query
 from cbde_mapreduce_spark.sources import load_table
 
@@ -475,11 +475,15 @@ def bpe_merges_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    vocab = wc.select(
-        F.trim(F.regexp_replace("word", "(.)", "$1 ")).alias("seq"), "n"
-    ).localCheckpoint()
-    try:
-        words, merges = vocab, []
+    merges = []
+    with RoundState() as rs:
+        # checkpointed, not persisted: it needs no layout, and AQE may
+        # coalesce a checkpoint's partitions but not a cached plan's
+        words = rs.invariant(
+            wc.select(
+                F.trim(F.regexp_replace("word", "(.)", "$1 ")).alias("seq"), "n"
+            ).localCheckpoint()
+        )
         for r in range(1, _BPE_ROUNDS + 1):
             toks = F.split("seq", " ")
             best = (
@@ -511,11 +515,9 @@ def bpe_merges_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(f" {best.pair.replace(' ', '')} "),
             )
             words = words.select(F.trim(merged).alias("seq"), "n")
-        return spark.createDataFrame(
-            merges, "round int not null, pair string not null, pair_count bigint"
-        )
-    finally:
-        release_local_checkpoint(vocab)
+    return spark.createDataFrame(
+        merges, "round int not null, pair string not null, pair_count bigint"
+    )
 
 
 @query(

@@ -56,24 +56,25 @@ def test_trade_graph_symmetrize_halves_disjoint(spark, sf_smoke):
 
 
 def test_persist_disk_preserves_partitioning_and_ordering(spark, sf_smoke):
-    """The per-round zero-exchange edge join relies on persist(DISK_ONLY)
-    (operators/ckpt.py::persist_disk) carrying the repartition +
-    sortWithinPartitions layout through the InMemoryRelation UNDER AQE —
-    which localCheckpoint does NOT (it records UnknownPartitioning; measured
-    r12, the reason the edge sets moved from local_checkpoint_disk to
-    persist_disk). If a Spark upgrade or a session-conf change (e.g.
-    canChangeCachedPlanOutputPartitioning=true) drops the guarantee, the
-    graph loops silently pay a full |E| shuffle + sort per round again —
-    this test fails instead."""
-    from cbde_mapreduce_spark.operators.ckpt import persist_disk
+    """The per-round zero-exchange edge join relies on a data-sized loop
+    invariant, persist(DISK_ONLY) (operators/loop.py::RoundState.invariant),
+    carrying the repartition + sortWithinPartitions layout through the
+    InMemoryRelation UNDER AQE — which localCheckpoint does NOT (it records
+    UnknownPartitioning; measured r12, the reason loop invariants are
+    persisted rather than checkpointed). If a Spark upgrade or a
+    session-conf change (e.g. canChangeCachedPlanOutputPartitioning=true)
+    drops the guarantee, the graph loops silently pay a full |E| shuffle +
+    sort per round again — this test fails instead."""
+    from cbde_mapreduce_spark.operators.loop import DATA_SIZED, RoundState
 
-    e = persist_disk(
-        _trade_edges_symmetrized(spark, sf_smoke)
-        # session-default partition count, exactly as graph_q.py does it
-        .repartition("a")
-        .sortWithinPartitions("a", "b")
-    )
-    try:
+    with RoundState() as rs:
+        e = rs.invariant(
+            _trade_edges_symmetrized(spark, sf_smoke)
+            # session-default partition count, exactly as graph_q.py does it
+            .repartition("a")
+            .sortWithinPartitions("a", "b"),
+            DATA_SIZED,
+        )
         e.count()  # materialize the cache like the loops' first round does
         ranks = e.select(F.col("a").alias("v")).distinct().select(
             "v", F.lit(1.0).alias("r")
@@ -107,8 +108,6 @@ def test_persist_disk_preserves_partitioning_and_ordering(spark, sf_smoke):
         assert any("Join" in n for n in names), names
         assert not any("Exchange" in n for n in names), names
         assert any("InMemoryTableScan" in n for n in names), names
-    finally:
-        e.unpersist()
 
 
 def test_cosine_gate_dispatch_unchanged(spark):

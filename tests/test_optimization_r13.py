@@ -1,9 +1,9 @@
 """Round-13 optimization invariants (OPTIMIZATION_r13.md).
 
 1. The iterative loops' PER-ROUND vertex state (SSSP dist, PPR ranks)
-   moved from ``localCheckpoint`` to ``persist_mem`` (MEMORY_AND_DISK —
-   the vertex-state storage level of the ckpt doctrine; the edge sets stay
-   DISK_ONLY): the groupBy that produces each round's state already lays
+   moved from ``localCheckpoint`` to persisted state (MEMORY_AND_DISK —
+   ``RoundState(layout_rounds=N)`` in operators/loop.py; the edge sets
+   stay DISK_ONLY): the groupBy that produces each round's state already lays
    it out on the next round's join key, and the persisted relation KEEPS
    that layout under AQE where a checkpoint records UnknownPartitioning —
    removing one vertex-sized Exchange per round past the broadcast gate.
@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cbde_mapreduce_spark.operators.ckpt import persist_disk, persist_mem
+from cbde_mapreduce_spark.operators.loop import DATA_SIZED, RoundState, release
 
 
 def _node_names(plan) -> list[str]:
@@ -55,7 +55,9 @@ def test_per_round_state_persist_keeps_layout(spark):
     state side reads the persisted groupBy output whose hash(v) partitioning
     satisfies the join. The only exchange of a full round is the relaxation
     groupBy — asserted by running the full round and counting exactly one."""
-    e = persist_disk(
+    # round 1 of 2 is an intermediate round: persisted with its layout kept
+    rs = RoundState(layout_rounds=2)
+    e = rs.invariant(
         spark.range(50_000)
         .select(
             (F.col("id") % 5_000).alias("a"),
@@ -63,7 +65,8 @@ def test_per_round_state_persist_keeps_layout(spark):
             (F.col("id") % 13 + 1).alias("w"),
         )
         .repartition("a")
-        .sortWithinPartitions("a", "b")
+        .sortWithinPartitions("a", "b"),
+        DATA_SIZED,
     )
     e.count()
 
@@ -86,26 +89,25 @@ def test_per_round_state_persist_keeps_layout(spark):
     # AQE ON: the production regime where localCheckpoint loses the layout
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     try:
-        state = persist_mem(sssp_round(seed))
-        state.count()
-        nxt = sssp_round(state)
-        # execute so the adaptive plan finalizes, then walk the final plan
-        nxt.write.format("noop").mode("overwrite").save()
-        jp = nxt._jdf.queryExecution().executedPlan()
-        if jp.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            jp = jp.finalPhysicalPlan()
-        names = _node_names(jp)
-        n_exchange = sum(n.startswith("ShuffleExchange") for n in names)
-        assert any("Join" in n for n in names), names
-        # exactly the one irreducible propagation groupBy exchange; a lost
-        # state layout would add a second (the vertex re-shuffle this
-        # round's optimization removed), a lost edge layout a third
-        assert n_exchange == 1, (n_exchange, names)
-        state.unpersist()
+        with rs:
+            state = rs.advance(sssp_round(seed))
+            nxt = sssp_round(state)
+            # execute so the adaptive plan finalizes, then walk the final plan
+            nxt.write.format("noop").mode("overwrite").save()
+            jp = nxt._jdf.queryExecution().executedPlan()
+            if jp.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+                jp = jp.finalPhysicalPlan()
+            names = _node_names(jp)
+            n_exchange = sum(n.startswith("ShuffleExchange") for n in names)
+            assert any("Join" in n for n in names), names
+            # exactly the one irreducible propagation groupBy exchange; a lost
+            # state layout would add a second (the vertex re-shuffle this
+            # round's optimization removed), a lost edge layout a third
+            assert n_exchange == 1, (n_exchange, names)
+            release(state)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        e.unpersist()
 
 
 def test_hits_c_layout_single_build_shuffle(spark):
@@ -142,11 +144,10 @@ def test_hits_c_layout_single_build_shuffle(spark):
 
 
 def test_cc_still_converges_and_releases(spark):
-    """connected_components with the persisted per-round state (and the
-    try/finally edge release, ADVICE r12) must still converge to min-label
-    components on a multi-round path graph — a shape that needs >1 round so
-    the persisted-state handoff (materialize round k, release round k-1) is
-    actually exercised."""
+    """connected_components under the round-state scope must still
+    converge to min-label components on a multi-round path graph — a shape
+    that needs >1 round so the state handoff (materialize round k, release
+    round k-1) is actually exercised."""
     from cbde_mapreduce_spark.operators.iterative import connected_components
 
     # path 0-1-2-3-4-5 plus a separate triangle {10, 11, 12}

@@ -103,7 +103,7 @@ _DATA_SIZED_NAME = re.compile(
 #: count, or a driver-side constant — with the justification in the query's
 #: docstring. Add a pair only with that proof; everything else mentioning a
 #: data-sized name must either drop the hint or gate it on a measured size
-#: (an `X if <size check> else Y` ternary is mechanically exempt below).
+#: through operators/gates.py::maybe_broadcast.
 _AUDITED_BOUNDED_BROADCASTS = {
     # top-k rep-pair tables: <= k+? rows by construction (expand step)
     ("similarity.py", 'top.filter(F.col("qid") != F.col("nid")).drop("bd1", "bd2")'),
@@ -152,11 +152,11 @@ def _broadcast_args(src: str):
 def test_no_broadcast_hint_on_data_sized_relation():
     """No F.broadcast hint may be placed on a relation keyed by a document /
     vector / vertex id (or a per-entity norm, rank, frontier, or label
-    table) unless (a) the hint is size-GATED — a conditional that measures
-    the relation and falls back to a shuffle join — or (b) the site is in
-    the audited-bounded allowlist with a docstring proof. Calendar spines,
-    1-row aggregates, and dimension tables don't match the deny names and
-    pass untouched."""
+    table) unless (a) the hint is size-GATED — placed by
+    ``gates.maybe_broadcast``, which measures the relation and falls back to
+    a shuffle join — or (b) the site is in the audited-bounded allowlist
+    with a docstring proof. Calendar spines, 1-row aggregates, and
+    dimension tables don't match the deny names and pass untouched."""
     pkg = pathlib.Path(__file__).resolve().parents[1] / "cbde_mapreduce_spark"
     offenders: list[str] = []
     for py in sorted(pkg.rglob("*.py")):
@@ -165,13 +165,6 @@ def test_no_broadcast_hint_on_data_sized_relation():
             if not _DATA_SIZED_NAME.search(arg):
                 continue
             if (py.name, arg) in _AUDITED_BOUNDED_BROADCASTS:
-                continue
-            # size-gated form: `F.broadcast(x) if <measured> else x` — the
-            # ternary is on the enclosing expression, so look at the source
-            # line(s) around the call for the gate keywords
-            span_start = src.rfind("\n", 0, src.find(f"F.broadcast({arg[:10]}")) + 1
-            window = src[span_start : span_start + 400]
-            if re.search(r"if\s+(n_\w+|small)\b.*else", window, re.S):
                 continue
             offenders.append(f"{py.name}:{line}: F.broadcast({arg})")
     assert not offenders, (
