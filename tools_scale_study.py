@@ -9,7 +9,9 @@ data without stalling the study). Prints ONE line: `<query> <median_ms>`.
 Methodology matches bench.py: build/plan once, then median of 3 warm
 materialized executions (Spark: Arrow toPandas; DuckDB: fetchall on a
 fresh cursor over persistent views). Spark shuffle partitions are sized by
-bench.py's data-volume rule.
+bench.py's data-volume rule. Each process starts its own JVM: 6-7 s to a
+first trivial query from the driver's class-data-sharing archive
+(session.py), 12-13 s without one, on 4 vCPUs.
 
 Usage:
     python tools_scale_study.py spark  /root/repo/.scratch/sf1 q1_pricing_summary

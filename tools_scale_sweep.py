@@ -1,7 +1,9 @@
 #!/usr/bin/env python
 """Registry-wide scale sweep: run every registered query at a replicated
-scale factor under a soft timeout (tools_scale_study.py pays ~15 s of JVM
-startup per query — fine for 13 headline timings, prohibitive for 284).
+scale factor under a soft timeout (tools_scale_study.py pays a JVM start
+per query: 6-7 s to a first trivial query from the driver's class-data-sharing
+archive, 12-13 s without one, on 4 vCPUs — fine for 13 headline timings,
+prohibitive for 284).
 
 Purpose is defect HUNTING, not benchmarking: at 100× replication every
 document/text/key group has ~100 identical copies, which is exactly the
