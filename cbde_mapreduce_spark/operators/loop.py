@@ -1,22 +1,20 @@
 """One storage and lifecycle policy for iterative driver loops (SURVEY.md §2
-iterative family: BFS, PPR, SSSP, connected components, the BPE merge loop).
+iterative family: BFS, PPR, SSSP, connected components).
 
 A MapReduce iteration is a chain of jobs with HDFS materialization between
 them; on Spark it is a driver loop whose state must be materialized per
 round, or the plan doubles each round. Following HaLoop's split, the loop
 holds two kinds of data:
 
-* **loop-invariant** sets (edge sets, degree tables, a vocabulary): built
+* **loop-invariant** sets (edge sets, degree tables): built
   once, persisted, read by every round. Data-sized sets go ``DISK_ONLY`` —
   their blocks in the unified memory pool starve every later aggregation
   that scans them (SCALING.md round 7). Key-sized tables (one row per
-  vertex or word) go ``MEMORY_AND_DISK``. ``persist`` rather than a
+  vertex) go ``MEMORY_AND_DISK``. ``persist`` rather than a
   checkpoint for a set laid out on the round join key, because an
   ``InMemoryRelation`` keeps its plan's partitioning and ordering under AQE
   and a ``localCheckpoint`` does not, so the set joins with no exchange and
   no sort (OPTIMIZATION_r12 §2, pinned by tests/test_optimization_r12.py).
-  A set that needs no layout may come in checkpointed instead, which keeps
-  AQE's coalescing of its partitions (the BPE vocabulary).
 * **per-round** state: each round is ``localCheckpoint``ed, which truncates
   the lineage. Under a fixed round bound a loop may instead keep the
   round's layout: intermediate rounds are held with
@@ -40,7 +38,7 @@ from pyspark.sql import DataFrame
 
 #: Storage level for a data-sized loop invariant (an edge set).
 DATA_SIZED = StorageLevel.DISK_ONLY
-#: Storage level for a key-sized loop invariant (a vertex or word table).
+#: Storage level for a key-sized loop invariant (a vertex table).
 KEY_SIZED = StorageLevel.MEMORY_AND_DISK
 
 
@@ -86,12 +84,10 @@ class RoundState:
         for df in self._invariants + (self._held if exc_type else []):
             release(df)
 
-    def invariant(self, df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
+    def invariant(self, df: DataFrame, level: StorageLevel) -> DataFrame:
         """Persist a loop-invariant set at ``DATA_SIZED`` or ``KEY_SIZED``;
-        the first action that reads it fills the blocks. With no level, df
-        is already materialized (a checkpoint) and is only held for release."""
-        if level is not None:
-            df = df.persist(level)
+        the first action that reads it fills the blocks."""
+        df = df.persist(level)
         self._invariants.append(df)
         return df
 

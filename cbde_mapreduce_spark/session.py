@@ -18,7 +18,8 @@ the daemon has started.
 
 The driver JVM maps its classes from a dynamic class-data-sharing archive
 (JDK 17 AppCDS, JEP 350) under the package root's ``.scratch/cds/``, keyed by
-the JDK build and the Spark jar list; that about halves session start. The
+the JDK build, the Spark jar list and the checkout's path (a copied checkout
+dumps its own); that about halves session start. The
 first session to find no archive for its key dumps one when its JVM exits:
 it starts 4-8 s slower, and its JVM spends about 13 s at exit writing the
 140-175 MB file; a later session publishes the file once the dump finished.
@@ -84,10 +85,13 @@ _JAVA_OPTS = "spark.driver.extraJavaOptions"
 _CDS_LOG = "-Xlog:cds*=off -Xlog:cds*=warning:stderr"
 
 
-def _cds_key(spark_home: str) -> str | None:
-    """Hash of the JDK build and the launcher's jar list, or None when either
-    is missing. The JVM validates an archive against both, and falls back to
-    no archive on a mismatch; the key keeps a stale one from being used."""
+def _cds_key(spark_home: str, cds_dir: str) -> str | None:
+    """Hash of the JDK build, the launcher's jar list and the archive
+    directory's real path, or None when the JDK or a jar is missing. The JVM
+    validates an archive against its classpath, which starts with
+    ``<cds_dir>/conf/``, and falls back to no archive on a mismatch; the key
+    keeps a stale one (another JDK or Spark, a copied or moved checkout)
+    from being used and makes such a checkout dump its own."""
     java_home = os.environ.get("JAVA_HOME")
     java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
     if java is None:
@@ -95,7 +99,7 @@ def _cds_key(spark_home: str) -> str | None:
     java = os.path.realpath(java)
     jdk = os.path.dirname(os.path.dirname(java))
     jars = sorted(glob.glob(os.path.join(spark_home, "jars", "*.jar")))
-    digest = hashlib.sha256()
+    digest = hashlib.sha256(f"{os.path.realpath(cds_dir)}\n".encode())
     try:
         for path in [java, os.path.join(jdk, "lib", "server", "libjvm.so"), *jars]:
             st = os.stat(path)
@@ -167,7 +171,7 @@ def _cds_flag(cds_dir: str) -> tuple[str | None, str | None]:
         name.endswith(".template") for name in os.listdir(conf_dir)
     ):
         return None, None
-    key = _cds_key(spark_home)
+    key = _cds_key(spark_home, cds_dir)
     if key is None:
         return None, None
     archive = _published(cds_dir, key) or _publish(cds_dir, key)

@@ -26,8 +26,6 @@ no protobuf and is the working keyed-state path in this environment.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
 from collections.abc import Iterator
 from typing import Any
 
@@ -36,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from cbde_mapreduce_spark.streaming.streams import events_stream
+from cbde_mapreduce_spark.streaming.streams import events_stream, run_to_memory
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, sum_value double"
 #: ``s`` carries EXACT INTEGER CENTS in the double slot (exact below 2^53
@@ -44,8 +42,8 @@ OUTPUT_SCHEMA = "user_id bigint, n_events bigint, sum_value double"
 #: pre-round-11 dollar-valued state, so a schema check would pass on an
 #: old checkpoint while reading dollars as cents (100x-wrong sums) —
 #: compatibility is TYPE-level only; pre-round-11 checkpoints must be
-#: discarded (ADVICE r11). In this repo every run gets a fresh
-#: tempfile.mkdtemp checkpoint (no cross-version resume exists), but any
+#: discarded (ADVICE r11). In this repo every run gets a fresh temp
+#: checkpoint (streams.run_to_memory; no cross-version resume exists), but any
 #: deployment with durable checkpoints must start a new location when
 #: adopting the cents unit.
 STATE_SCHEMA = "n bigint, s double"
@@ -88,17 +86,7 @@ def run_stateful_user_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    sink = f"profiles_{uuid.uuid4().hex[:12]}"
-    query = (
-        profiles.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_state_"))
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(sink)
+    return run_to_memory(profiles, "profiles", "update")
 
 
 def transform_with_state_available() -> bool:
@@ -166,17 +154,7 @@ def run_tws_user_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="None",
         )
     )
-    sink = f"tws_{uuid.uuid4().hex[:12]}"
-    query = (
-        profiles.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_tws_"))
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(sink)
+    return run_to_memory(profiles, "tws", "update")
 
 
 ATTR_OUTPUT_SCHEMA = "user_id bigint, ts_us bigint, channel string, value double"
@@ -267,14 +245,4 @@ def run_stateful_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink = f"attrib_{uuid.uuid4().hex[:12]}"
-    query = (
-        attributed.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_attr_"))
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(sink)
+    return run_to_memory(attributed, "attrib", "append")

@@ -15,6 +15,7 @@ watermark, demonstrated in tests/test_streaming.py).
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -126,6 +127,30 @@ def kafka_events_stream(
     return _project_events(parsed)
 
 
+def run_to_memory(stream: DataFrame, name: str, output_mode: str) -> DataFrame:
+    """Run a streaming query to completion (``Trigger.AvailableNow``) into a
+    memory sink and return the sink as a table.
+
+    The query's checkpoint is a fresh temp dir, removed once the query has
+    terminated: the memory sink holds the rows, and a bounded run has no
+    later batch to resume from."""
+    sink = f"{name}_{uuid.uuid4().hex[:12]}"
+    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
+    try:
+        (
+            stream.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return stream.sparkSession.table(sink)
+
+
 def run_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour counts as a real streaming query, run to completion.
 
@@ -151,17 +176,7 @@ def run_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink = f"tumbling_{uuid.uuid4().hex[:12]}"
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_tumbling_"))
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(sink)
+    return run_to_memory(agg, "tumbling", "complete")
 
 
 def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -183,17 +198,7 @@ def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = deduped.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_users")
     )
-    sink = f"dedup_{uuid.uuid4().hex[:12]}"
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_dedup_"))
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(sink)
+    return run_to_memory(agg, "dedup", "complete")
 
 
 def run_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -225,17 +230,7 @@ def run_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink = f"session_{uuid.uuid4().hex[:12]}"
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_session_"))
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(sink)
+    return run_to_memory(agg, "session", "complete")
 
 
 def run_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -264,17 +259,7 @@ def run_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink = f"sliding_{uuid.uuid4().hex[:12]}"
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_sliding_"))
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(sink)
+    return run_to_memory(agg, "sliding", "complete")
 
 
 def run_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -312,17 +297,7 @@ def run_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         clicks,
         F.expr("p_user = c_user AND c_ts BETWEEN p_ts - INTERVAL 30 MINUTES AND p_ts"),
     ).select("p_id", "c_id")
-    sink = f"ssjoin_{uuid.uuid4().hex[:12]}"
-    query = (
-        joined.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_ssjoin_"))
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(sink)
+    return run_to_memory(joined, "ssjoin", "append")
 
 
 def run_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -363,14 +338,4 @@ def run_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "volume",
         )
     )
-    sink = f"ohlc_{uuid.uuid4().hex[:12]}"
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_ohlc_"))
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(sink)
+    return run_to_memory(agg, "ohlc", "complete")

@@ -6,9 +6,9 @@ running many iterative queries used to accumulate every round's superseded
 state (a 25-heavy-query session OOMed at position ~22 while each query
 passed in isolation, ROTATION.md round-6 closing re-probe). These tests pin
 the scope's rules: a superseded round is released once its successor
-materializes, so one query leaves behind at most its FINAL state (BPE:
-nothing — its merge table is a local relation of the collected winners),
-and a loop that raises mid-way leaves nothing.
+materializes, so one query leaves behind at most its FINAL state, and a
+loop that raises mid-way leaves nothing. BPE is swept too: its merge rounds
+run on the driver, so it must leave nothing at all.
 """
 
 from __future__ import annotations
@@ -16,7 +16,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-import cbde_mapreduce_spark.plans.llm_pipeline as llm
 from cbde_mapreduce_spark.operators.iterative import (
     connected_components,
     connected_components_star,
@@ -76,7 +75,7 @@ def test_connected_components_leave_one_round_of_state(spark):
 
 
 def test_iterative_queries_leave_bounded_state(spark, sf_smoke):
-    """Registry-level sweep of every migrated iterative query: after
+    """Registry-level sweep of every iterative query: after
     collect(), at most the documented live state remains — the final
     round's table (BFS/PPR/SSSP/CC), none for BPE — never one block-set
     per round per table."""
@@ -86,7 +85,7 @@ def test_iterative_queries_leave_bounded_state(spark, sf_smoke):
         "sssp_trade_graph": 1,  # final dist; edge set released
         "neardup_components": 1,  # final CC labels
         "neardup_components_star": 1,  # final star forest
-        "bpe_merges_vocab": 0,  # vocabulary released; merges are a local relation
+        "bpe_merges_vocab": 0,  # driver-side rounds; merges are a local relation
     }
     for name, budget in budgets.items():
         before = _n_persistent(spark)
@@ -103,33 +102,20 @@ def test_iterative_queries_leave_bounded_state(spark, sf_smoke):
         "sssp_trade_graph",
         "connected_components",
         "connected_components_star",
-        "bpe_merges_vocab",
     ],
 )
 def test_loop_raising_in_round_2_leaves_no_blocks(spark, sf_smoke, monkeypatch, name):
     """A loop that raises in round 2 — after its invariants are filled and
     round 1's state (if any) is held — must release every block it made."""
-    if name == "bpe_merges_vocab":
-        # BPE holds no per-round state: fail its second merge projection
-        calls, replace = [], llm.F.replace
+    advance = RoundState.advance
 
-        def flaky(*args):
-            calls.append(1)
-            if len(calls) == 2:
-                raise _Injected
-            return replace(*args)
+    def flaky(self, df):
+        out = advance(self, df)
+        if self.round == 2:
+            raise _Injected
+        return out
 
-        monkeypatch.setattr(llm.F, "replace", flaky)
-    else:
-        advance = RoundState.advance
-
-        def flaky(self, df):
-            out = advance(self, df)
-            if self.round == 2:
-                raise _Injected
-            return out
-
-        monkeypatch.setattr(RoundState, "advance", flaky)
+    monkeypatch.setattr(RoundState, "advance", flaky)
     before = _persistent_ids(spark)
     with pytest.raises(_Injected):
         if name in _OPERATORS:

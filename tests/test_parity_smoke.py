@@ -3,9 +3,9 @@ DuckDB twins (tests/parity.py), so a value bug fails the fast tier and not
 only the slow full-registry sweep (tests/test_parity.py).
 
 The names are the iterative loops that share operators/loop.py's
-round-state scope, at sf0.001 (``sf_smoke``). BFS also runs at sf0.01
-(``sf_oracle``): at sf0.001 its third round reaches no new vertex, so a
-loop that stopped a round early would still match there.
+round-state scope and the BPE merge loop, at sf0.001 (``sf_smoke``). BFS
+also runs at sf0.01 (``sf_oracle``): at sf0.001 its third round reaches no
+new vertex, so a loop that stopped a round early would still match there.
 """
 
 from __future__ import annotations

@@ -1,8 +1,9 @@
 """The driver JVM's class-data-sharing archive (cbde_mapreduce_spark/session.py).
 
 Spark-free checks of the option builder against a fake ``SPARK_HOME``: which
-flag a launch gets with no archive, a published one, a stale or truncated
-one, a dump still running or one that failed, and a conf dir Spark reads;
+flag a launch gets with no archive, a published one, a stale, truncated or
+copied one, a dump still running or one that failed, and a conf dir Spark
+reads;
 plus one subprocess session that starts and runs a query with garbage at the
 published archive path, which the JVM must reject and fall back from.
 """
@@ -10,6 +11,7 @@ published archive path, which the JVM must reject and fall back from.
 from __future__ import annotations
 
 import os
+import shutil
 import subprocess
 import sys
 import textwrap
@@ -57,7 +59,7 @@ def finished_dump(cds, key: str, pid: int, head: bytes = S._CDS_MAGIC) -> str:
 
 def test_no_archive_claims_a_per_pid_dump(spark_home, tmp_path):
     cds = tmp_path / "fresh" / "cds"
-    key = S._cds_key(str(spark_home))
+    key = S._cds_key(str(spark_home), str(cds))
     flag, claim = S._cds_flag(str(cds))
     assert f"-XX:ArchiveClassesAtExit={cds}/{key}.{os.getpid()}.tmp" in flag.split()
     assert "SharedArchiveFile" not in flag
@@ -94,7 +96,7 @@ def test_one_of_many_concurrent_sessions_claims_the_dump(spark_home, cds):
 def test_published_archive_is_appended_to_callers_java_options(
     spark_home, cds, monkeypatch
 ):
-    key = S._cds_key(str(spark_home))
+    key = S._cds_key(str(spark_home), str(cds))
     finished_dump(cds, key, dead_pid())
     (cds / "0123456789abcdef.4096.jsa").write_bytes(b"another key's archive")
     (cds / f"{key}.1.tmp").write_bytes(b"an abandoned dump")
@@ -113,7 +115,7 @@ def test_published_archive_is_appended_to_callers_java_options(
 
 
 def test_concurrent_publishers_map_one_archive(spark_home, cds):
-    key = S._cds_key(str(spark_home))
+    key = S._cds_key(str(spark_home), str(cds))
     finished_dump(cds, key, dead_pid())
     flags = concurrent_flags(cds)
     assert set(flags) == {f"{S._CDS_LOG} -XX:SharedArchiveFile={cds}/{key}.4096.jsa"}
@@ -121,7 +123,7 @@ def test_concurrent_publishers_map_one_archive(spark_home, cds):
 
 
 def test_dump_without_magic_is_dropped_and_not_retried(spark_home, cds):
-    key = S._cds_key(str(spark_home))
+    key = S._cds_key(str(spark_home), str(cds))
     tmp = finished_dump(cds, key, dead_pid(), head=b"\0\0\0\0")
     assert S._cds_flag(str(cds)) == (None, None)
     assert not os.path.exists(tmp)
@@ -130,7 +132,7 @@ def test_dump_without_magic_is_dropped_and_not_retried(spark_home, cds):
 
 
 def test_dump_of_a_live_writer_is_not_published(spark_home, cds):
-    key = S._cds_key(str(spark_home))
+    key = S._cds_key(str(spark_home), str(cds))
     tmp = finished_dump(cds, key, dead_pid())
     with open(cds / f"{key}.claim", "a") as f:  # the JVM still writes it
         f.write(f"{os.getpid()}\n")
@@ -141,7 +143,7 @@ def test_dump_of_a_live_writer_is_not_published(spark_home, cds):
 
 def test_truncated_archive_is_not_mapped(spark_home, cds):
     # JDK 17 maps a truncated archive and dies of SIGBUS
-    key = S._cds_key(str(spark_home))
+    key = S._cds_key(str(spark_home), str(cds))
     (cds / f"{key}.4096.jsa").write_bytes(S._CDS_MAGIC + b"\xff" * 1000)
     (cds / f"{key}.claim").write_text(f"{dead_pid()}\n")
     assert S._cds_flag(str(cds)) == (None, None)
@@ -166,14 +168,31 @@ def test_unwritable_archive_dir_gets_no_archive(spark_home, tmp_path):
 
 
 def test_new_jar_changes_the_key(spark_home, cds):
-    key = S._cds_key(str(spark_home))
+    key = S._cds_key(str(spark_home), str(cds))
     (cds / f"{key}.4096.jsa").write_bytes(b"\xff" * 4096)
     (spark_home / "jars" / "extra.jar").write_bytes(b"jar")
-    stale = S._cds_key(str(spark_home))
+    stale = S._cds_key(str(spark_home), str(cds))
     assert stale != key
     flag, _ = S._cds_flag(str(cds))
     assert "SharedArchiveFile" not in flag
     assert f"{stale}.{os.getpid()}.tmp" in flag
+
+
+def test_copied_cds_dir_dumps_its_own_archive(spark_home, cds, tmp_path):
+    """The driver classpath starts with ``<cds dir>/conf/``, so an archive
+    dumped in one checkout is rejected by the JVM in a copy of it: the copy
+    must get its own key, and dump rather than map the copied archive."""
+    key = S._cds_key(str(spark_home), str(cds))
+    finished_dump(cds, key, dead_pid())
+    assert "SharedArchiveFile" in S._cds_flag(str(cds))[0]
+    copy = tmp_path / "copy" / "cds"
+    shutil.copytree(cds, copy)
+    copy_key = S._cds_key(str(spark_home), str(copy))
+    assert copy_key != key
+    flag, claim = S._cds_flag(str(copy))
+    assert "SharedArchiveFile" not in flag
+    assert f"-XX:ArchiveClassesAtExit={copy}/{copy_key}.{os.getpid()}.tmp" in flag
+    assert claim == f"{copy}/{copy_key}.claim"
 
 
 def test_session_starts_with_garbage_at_the_archive_path(tmp_path):
@@ -187,7 +206,7 @@ def test_session_starts_with_garbage_at_the_archive_path(tmp_path):
 
         S._CDS_DIR = {str(tmp_path / "cds")!r}
         os.makedirs(S._CDS_DIR)
-        key = S._cds_key(os.environ.get("SPARK_HOME") or _find_spark_home())
+        key = S._cds_key(os.environ.get("SPARK_HOME") or _find_spark_home(), S._CDS_DIR)
         with open(os.path.join(S._CDS_DIR, f"{{key}}.65536.jsa"), "wb") as f:
             f.write(S._CDS_MAGIC + b"\\xff" * 65532)
         spark = S.get_spark(app_name="cds-garbage-check")

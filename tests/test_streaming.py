@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import glob
+import os
 import tempfile
 import uuid
 
@@ -18,13 +20,14 @@ from cbde_mapreduce_spark.streaming import (
 
 
 def test_stream_matches_batch_tumbling(spark, sf_smoke):
-    """The streaming tumbling agg must equal its batch twin exactly."""
-    got = (
-        run_streaming_tumbling(spark, sf_smoke)
-        .toPandas()
-        .sort_values("hour_start")
-        .reset_index(drop=True)
-    )
+    """The streaming tumbling agg must equal its batch twin exactly. The
+    runner removes its checkpoint dir once the query has terminated, and
+    the memory sink still serves the rows afterwards."""
+    ckpts = os.path.join(tempfile.gettempdir(), "ckpt_*")
+    before = set(glob.glob(ckpts))
+    stream = run_streaming_tumbling(spark, sf_smoke)
+    assert set(glob.glob(ckpts)) <= before
+    got = stream.toPandas().sort_values("hour_start").reset_index(drop=True)
     want = (
         REGISTRY["tumbling_hourly_events"].fn(spark, sf_smoke)
         .toPandas()
