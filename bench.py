@@ -1,29 +1,25 @@
 #!/usr/bin/env python
-"""Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1),
+each run from a freshly built plan.
 
 Prints ONE JSON line:
-    {"metric": "...", "value": <total_sec>, "unit": "sec",
-     "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1, ...}
+    {"metric": "headline_fresh_plan_runtime", "value": <sec>, "unit": "sec",
+     "cpu_s": ..., "stolen_s": ..., "queries": {"q1_pricing_summary": sec, ...},
+     "tracked": {...}, "sf": 0.1, "planning_sec": ..., ...}
 
-Methodology (mirrors BASELINE.md's DuckDB warm median-of-3, hardened
-against ambient load in round 8):
-- one shared SparkSession; per query the DataFrame is built once, then
-  executed RUNS times per round for ROUNDS interleaved rounds; per-query
-  time = MEDIAN over rounds of the per-round median wall-clock, with
-  results materialized via the Arrow path (toPandas). Load averages
-  before/after are recorded alongside so a hot machine is visible in the
-  artifact. (Round 9, ADVICE r8: the round-8 min-of-rounds was downward-
-  biased relative to the DuckDB baseline's warm median; the median of
-  round medians keeps the load robustness — a spike must hit 2 of 3
-  time-separated windows to move the record — without the asymmetry.)
-- driver-side plan construction (py4j + Catalyst analysis, ~0.3-0.8 s per
-  query) is reported separately as ``planning_sec``: it is a fixed,
-  data-size-independent driver cost — at the 100 TB design point it is
-  noise, at sf0.1 it would swamp the signal being measured.
-- no .cache(): every execution re-reads parquet, like the DuckDB views.
-- AQE is disabled for the bench run only (stage-wise re-planning adds
-  driver latency at toy scale; at cluster scale it wins and stays on in
-  session defaults — see cbde_mapreduce_spark/session.py).
+Method: one ``get_spark()`` session with the engine's own defaults
+(``SPARK_GRAFT_CPUS`` sets its width). Every run goes through ``time_fresh``:
+release the cached tables and every persistent RDD, build the plan from the
+registry off the clock, then time ``toPandas()`` over the whole plan, so each
+run executes every shuffle stage and reuses nothing an earlier run left. One
+unmeasured pass over all names warms the JVM, codegen and the Python workers;
+``RUNS`` measured passes follow. A name's time is its median over the
+measured passes of wall time less the hypervisor's steal (``/proc/stat``,
+read through ``perfbench/probes.py``); ``value`` sums it over ``HEADLINE``,
+and ``cpu_s``/``stolen_s`` sum the medians of the process tree's CPU seconds
+and the steal the same way. ``tracked`` names are timed alike and stay out
+of the total. ``planning_sec`` is the summed median plan-build time of all
+names. Per-pass samples go to ``.scratch/bench_detail.json``.
 """
 
 from __future__ import annotations
@@ -38,7 +34,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from cbde_mapreduce_spark.plans import REGISTRY  # noqa: E402
 from cbde_mapreduce_spark.session import get_spark  # noqa: E402
+from perfbench.probes import stolen_s, tree_cpu_s  # noqa: E402
 
+#: One representative per major family: TPC-H joins and aggregates, text,
+#: windows, similarity, dedup, LLM-pipeline packing and an iterative graph.
 HEADLINE = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -48,223 +47,102 @@ HEADLINE = [
     "sessionize_events",
     "cosine_topk_similarity",
     "dedup_exact_docs",
-    # Round-4 additions (round-1 judge ask #8): one representative per major
-    # family added since round 1, so a regression anywhere in the registry's
-    # breadth is visible round-over-round, not just in the original 8.
-    "q7_nation_volume",  # 6-table star join
-    "scd2_customer_status",  # window-heavy (SCD2 change capture)
-    "pack_sequences_chunked",  # LLM-pipeline (sequence packing)
-    "sparse_cosine_topk_docs",  # guarded sparse TF-IDF postings join
-    "pagerank_trade_graph",  # iterative graph
+    "q7_nation_volume",
+    "scd2_customer_status",
+    "pack_sequences_chunked",
+    "sparse_cosine_topk_docs",
+    "pagerank_trade_graph",
 ]
 
-#: 9 (was 5 through round 3): every headline query is sub-160 ms at sf0.1,
-#: where single-run noise is 1.2-1.9x (measured, BENCHNOTES.md) — more
-#: samples tighten the median for ~3 s of extra wall-clock.
-RUNS = 9
-
-#: Round-8 (VERDICT r7 ask #3): a single median-of-9 is still hostage to
-#: ambient machine load over its ~10 s window — BENCH_r07 recorded
-#: sessionize_events at 1.60x its r6 reading from load alone, breaching the
-#: repo's own <=1.5x guard in the artifact of record. The recorded value is
-#: the MEDIAN of ROUNDS interleaved median-of-9 passes: the full headline
-#: list is timed, then timed again, so each query gets medians from
-#: time-separated windows and a load spike must span a majority of a
-#: query's passes to survive into the record. (Round 8 used MIN of rounds;
-#: ADVICE r8 flagged that as downward-biased vs the DuckDB baseline's warm
-#: median-of-3, so round 9 switched to the symmetric median-of-medians.)
-ROUNDS = 3
-
-#: Round-10 (VERDICT r9 "What's wrong" #1): BENCH_r09 was driver-recorded on
-#: a machine with loadavg 4.4-9.4 and carried ~20% uniform ambient inflation
-#: that only a settled re-run could expose. The artifact now self-labels:
-#: if the 1-minute loadavg exceeds this threshold right before measurement,
-#: the run first sleeps once to let a transient spike drain, re-checks, and
-#: if still hot (a) records ``"contended": true`` and (b) adds one extra
-#: interleaved round so the median has more time-separated windows to vote
-#: with. A reader of BENCH_r{N}.json no longer needs BENCHNOTES archaeology
-#: to know whether the number was taken on a quiet box.
-#: Round-13 (VERDICT r12 "What's wrong" #5): the absolute 2.0 threshold is
-#: mis-calibrated at low core counts — the driver's 8-CPU scaling run
-#: labeled its FASTER first attempt (0.55 s, loadavg ~2-4 on a box with 32
-#: hardware threads mostly idle) contended and recorded the 3x slower
-#: "settled" retry, skewing the scaling ratios pessimistic. Contention is
-#: relative to compute width: a loadavg of 2 on an 8-core allocation is a
-#: quarter-busy box, not a hot one. Threshold = max(2.0, 0.25 * cpus), so
-#: the 32-CPU headline run keeps an effective bar of 8 (the r12 headline
-#: run measured at loadavg 1.96 — far under either bar) and low-core runs
-#: stop inverting settled/contended ordering.
-CONTENTION_SETTLE_SEC = 20
-
-
-def _contention_loadavg(cpus: int) -> float:
-    return max(2.0, 0.25 * cpus)
-
-#: Round-11 (VERDICT r10 "Next round" #2): self-labeling was not enough —
-#: BENCH_r10.json still RECORDED the hot number (uniform 1.6-3.6x ambient
-#: inflation, `contended: true`). The run now ESCALATES: if the box is
-#: still hot after the settle-and-recheck, the whole measurement pass is
-#: retried with backoff, and the artifact of record is the FIRST SETTLED
-#: attempt; only if the box never settles does the labeled hot run land,
-#: carrying the full attempts trail so a reader sees the escalation was
-#: exhausted, not skipped. Bounded: MAX_ATTEMPTS full passes, BACKOFF_SEC
-#: sleep between them (env-overridable for CI).
-MAX_ATTEMPTS = int(os.environ.get("SPARK_BENCH_MAX_ATTEMPTS", "3"))
-BACKOFF_SEC = float(os.environ.get("SPARK_BENCH_BACKOFF_SEC", "60"))
-
-#: Second tracked tier (VERDICT r9 ask #5): the round-9 Arrow-native plan
-#: shapes and the single heaviest registry name get round-over-round timing
-#: regression tracking like the 13 headliners, WITHOUT joining the headline
-#: total (which must stay comparable across rounds). Fewer runs: these are
-#: trend lines, not the artifact's headline statistic.
+#: Arrow-native plan shapes and the heaviest registry name: timed like the
+#: headline, kept out of its total.
 TRACKED = [
     "arrow_grouped_minmax_norm",
     "arrow_map_doc_stats",
     "udtf_analyze_ngrams",
     "item_item_cf_topk",
 ]
-RUNS_TRACKED = 3
+
+#: measured passes after the warm one: a pass of all names at sf0.1 takes
+#: 50-60 s on 4 vCPUs, and a whole run must stay under 5 minutes there
+RUNS = 2
 
 
-def _shuffle_partitions_for(sf: float, cpus: int) -> int:
-    """Size shuffle partitions to the benchmark's data volume: the largest
-    shuffle at scale factor ``sf`` is lineitem (~6M rows/SF); target ~40k
-    rows per shuffle partition, floored at 4 and capped at the CPU count.
+def release(spark) -> None:
+    """Drop every cached table and unpersist every persistent RDD."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(True)
 
-    This is the static equivalent of what AQE's coalescePartitions does at
-    runtime (AQE stays ON in production session defaults — see session.py —
-    and is pinned off here only to keep stage-replanning driver latency out
-    of the sub-100 ms measurements). Measured at sf0.1 (BENCHNOTES.md
-    round-5): every headline query is flat-to-2x faster at the sized count
-    than at a fixed 32, because 32-way scheduling overhead dominates 2-4 MB
-    shuffles; at sf >= 1 the formula returns the CPU cap and is a no-op.
-    ``SPARK_SHUFFLE_PARTITIONS`` still overrides.
+
+def time_fresh(spark, sf_dir: str, name: str) -> dict[str, float]:
+    """Build registry query ``name`` fresh and time its full execution.
+
+    Returns ``build_s`` (off the clock), ``run_s`` (wall less steal),
+    ``cpu_s`` (process tree) and ``stolen_s``. The session holds no cached
+    relation and no persistent RDD when the execution starts or after it.
     """
-    rows = int(6_000_000 * sf)
-    return max(4, min(cpus, rows // 40_000))
+    release(spark)
+    try:
+        t0 = time.perf_counter()
+        df = REGISTRY[name].fn(spark, sf_dir)
+        build = time.perf_counter() - t0
+        s0, c0, t0 = stolen_s(), tree_cpu_s(), time.perf_counter()
+        df.toPandas()
+        wall = time.perf_counter() - t0
+        cpu, stolen = tree_cpu_s() - c0, stolen_s() - s0
+    finally:
+        release(spark)
+    return {"build_s": build, "run_s": wall - stolen, "cpu_s": cpu, "stolen_s": stolen}
+
+
+def run(
+    spark, sf_dir: str, headline: list[str], tracked: list[str], runs: int
+) -> tuple[dict, dict[str, list[dict[str, float]]]]:
+    """One warm pass, then ``runs`` measured passes over ``headline + tracked``;
+    returns the record and each name's per-pass samples."""
+    names = headline + tracked
+    for name in names:
+        time_fresh(spark, sf_dir, name)
+    samples = {n: [] for n in names}
+    for _ in range(runs):
+        for name in names:
+            samples[name].append(time_fresh(spark, sf_dir, name))
+
+    def med(name: str, key: str) -> float:
+        return statistics.median(s[key] for s in samples[name])
+
+    record = {
+        "metric": "headline_fresh_plan_runtime",
+        "value": round(sum(med(n, "run_s") for n in headline), 4),
+        "unit": "sec",
+        "cpu_s": round(sum(med(n, "cpu_s") for n in headline), 3),
+        "stolen_s": round(sum(med(n, "stolen_s") for n in headline), 3),
+        "queries": {n: round(med(n, "run_s"), 4) for n in headline},
+        "tracked": {n: round(med(n, "run_s"), 4) for n in tracked},
+        "sf": float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1"),
+        "planning_sec": round(sum(med(n, "build_s") for n in names), 4),
+        "runs_per_query": runs,
+        "master": spark.sparkContext.master,
+        "note": "fresh plan per run, median of wall - steal; "
+        "detail in .scratch/bench_detail.json",
+    }
+    return record, samples
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(
-        app_name="cbde-mapreduce-spark-bench",
-        shuffle_partitions=int(
-            os.environ.get(
-                "SPARK_SHUFFLE_PARTITIONS", str(_shuffle_partitions_for(sf, cpus))
-            )
-        ),
-        extra_conf={
-            "spark.sql.adaptive.enabled": os.environ.get("SPARK_BENCH_AQE", "false")
-        },
-    )
+    spark = get_spark(app_name="cbde-mapreduce-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm up JVM / codegen / python workers once, off the clock.
-    REGISTRY["q1_pricing_summary"].fn(spark, sf_dir).collect()
-    REGISTRY["cosine_topk_similarity"].fn(spark, sf_dir).toPandas()
-
-    dfs: dict[str, object] = {}
-    planning: dict[str, float] = {}
-    for name in HEADLINE + TRACKED:
-        t0 = time.perf_counter()
-        df = REGISTRY[name].fn(spark, sf_dir)
-        df.schema  # force analysis
-        planning[name] = round(time.perf_counter() - t0, 4)
-        dfs[name] = df
-
-    threshold = _contention_loadavg(cpus)
-
-    def check_contention() -> tuple[tuple[float, float, float], bool]:
-        load = os.getloadavg()
-        if load[0] > threshold:
-            # transient spike? settle once, re-read, only then label
-            time.sleep(CONTENTION_SETTLE_SEC)
-            load = os.getloadavg()
-        return load, load[0] > threshold
-
-    def measure(rounds: int) -> dict[str, list[float]]:
-        medians: dict[str, list[float]] = {n: [] for n in HEADLINE + TRACKED}
-        for _ in range(rounds):
-            for name in HEADLINE + TRACKED:
-                samples = []
-                for _ in range(RUNS if name in HEADLINE else RUNS_TRACKED):
-                    t0 = time.perf_counter()
-                    dfs[name].toPandas()
-                    samples.append(time.perf_counter() - t0)
-                medians[name].append(statistics.median(samples))
-        return medians
-
-    attempts_trail: list[dict[str, object]] = []
-    for attempt in range(1, MAX_ATTEMPTS + 1):
-        load_before, contended = check_contention()
-        rounds = ROUNDS + (1 if contended else 0)
-        medians = measure(rounds)
-        attempts_trail.append(
-            {
-                "attempt": attempt,
-                "contended": contended,
-                "loadavg_before": [round(v, 2) for v in load_before],
-                "loadavg_after": [round(v, 2) for v in os.getloadavg()],
-                "total": round(
-                    sum(statistics.median(medians[n]) for n in HEADLINE), 4
-                ),
-            }
-        )
-        if not contended:
-            break
-        if attempt < MAX_ATTEMPTS:
-            time.sleep(BACKOFF_SEC)
-
-    timings = {
-        name: round(statistics.median(medians[name]), 4) for name in HEADLINE
-    }
-    tracked = {
-        name: round(statistics.median(medians[name]), 4) for name in TRACKED
-    }
-
-    total = round(sum(timings.values()), 4)
-    # The driver's BENCH_r{N}.json keeps only the LAST 2000 chars of
-    # stdout; round-11's line (round_medians + the attempts trail + a long
-    # note) overflowed that, truncating the head of the JSON and leaving
-    # the driver's "parsed" field null. The printed line is now the
-    # compact record (short note, attempts as per-attempt totals only);
-    # the full detail — per-round medians, per-query planning, the whole
-    # attempts trail — goes to a sidecar file next to the repo root.
-    record = {
-        "metric": "headline_queries_total_runtime",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "tracked": tracked,
-        "sf": sf,
-        "planning_sec": round(sum(planning.values()), 4),
-        "runs_per_query": RUNS,
-        "runs_tracked": RUNS_TRACKED,
-        "rounds": rounds,
-        "loadavg_before": [round(v, 2) for v in load_before],
-        "loadavg_after": [round(v, 2) for v in os.getloadavg()],
-        "contended": contended,
-        "attempt_totals": [a["total"] for a in attempts_trail],
-        "note": "median of interleaved round medians, warm Arrow runs; "
-        "detail in .scratch/bench_detail.json",
-    }
-    detail = dict(
-        record,
-        round_medians={
-            n: [round(v, 4) for v in medians[n]] for n in HEADLINE + TRACKED
-        },
-        planning_per_query=planning,
-        attempts=attempts_trail,
-    )
+    record, samples = run(spark, sf_dir, HEADLINE, TRACKED, RUNS)
     try:
         os.makedirs(".scratch", exist_ok=True)
         with open(".scratch/bench_detail.json", "w") as f:
-            json.dump(detail, f, indent=1)
+            json.dump(dict(record, samples=samples), f, indent=1)
     except OSError:
-        pass  # sidecar is best-effort; the printed line is the record
+        pass  # the sidecar is best-effort; the printed line is the record
     line = json.dumps(record)
+    # a reader that keeps only the last 2000 chars of stdout gets the whole line
     assert len(line) < 1900, f"bench JSON line too long ({len(line)} chars)"
     print(line)
     spark.stop()

@@ -1,25 +1,16 @@
 #!/usr/bin/env python
-"""Per-query round-over-round bench regression report.
+"""Per-query regression report between two recorded bench.py runs.
 
-Usage: python bench_compare.py BENCH_r01.json [BENCH_r02.json]
+Usage: python bench_compare.py BASELINE.json CURRENT.json
 
-With one argument, runs bench.py fresh and compares against the given
-baseline; with two, compares the two recorded files. Prints one line per
-query with the time ratio (current / baseline) and flags anything above
-the 1.5× regression bar from the round-1 verdict.
-
-Contention awareness (VERDICT r11 ask #7): each side's ``contended``
-flag is printed in the header, and a cross-state comparison (settled vs
-contended) is ANNOTATED as not like-for-like — per-query ratios against
-a hot side mostly measure ambient load, not plan changes. Pass
-``--allow-contended`` to compare anyway without the nonzero exit that a
-cross-state mismatch otherwise adds.
+Prints one line per query with the time ratio (current / baseline) and
+flags anything above 1.5x. Refuses a pair whose ``metric`` names differ:
+those measure different things (a fresh-plan run against a warm-tail run).
 """
 
 from __future__ import annotations
 
 import json
-import subprocess
 import sys
 
 
@@ -38,42 +29,17 @@ def _load(path: str) -> dict:
             return json.loads(line)
     raise SystemExit(
         f"no bench JSON found in {path} (the driver keeps only the last "
-        "2000 stdout chars — bench.py emits a compact line since round 12 "
-        "so this should not recur; older artifacts may be unreadable)"
+        "2000 stdout chars; older artifacts may have lost the line)"
     )
 
 
-def _contention_state(doc: dict) -> str:
-    """settled / contended / unknown (pre-round-10 artifacts lack the flag)."""
-    c = doc.get("contended")
-    if c is None:
-        return "unknown"
-    return "contended" if c else "settled"
-
-
 def main() -> None:
-    allow_contended = "--allow-contended" in sys.argv
-    argv = [a for a in sys.argv if a != "--allow-contended"]
-    if len(argv) not in (2, 3):
+    if len(sys.argv) != 3:
         raise SystemExit(__doc__)
-    base = _load(argv[1])
-    if len(argv) == 3:
-        cur = _load(argv[2])
-    else:
-        out = subprocess.run(
-            [sys.executable, "bench.py"], capture_output=True, text=True, check=True
-        )
-        cur = json.loads(out.stdout.strip().splitlines()[-1])
-
-    bs, cs = _contention_state(base), _contention_state(cur)
-    print(f"STATE    baseline={bs}  current={cs}")
-    cross_state = bs != cs or "contended" in (bs, cs) or "unknown" in (bs, cs)
-    if cross_state:
-        print(
-            "WARNING  not like-for-like: at least one side is contended or "
-            "unlabeled — per-query ratios reflect ambient load as much as "
-            "plan changes; prefer comparing two settled artifacts"
-            + (" (continuing: --allow-contended)" if allow_contended else "")
+    base, cur = _load(sys.argv[1]), _load(sys.argv[2])
+    if base.get("metric") != cur.get("metric"):
+        raise SystemExit(
+            f"not comparable: metric {base.get('metric')!r} vs {cur.get('metric')!r}"
         )
 
     regressions = 0
@@ -93,7 +59,7 @@ def main() -> None:
             print(f"NEW      {name}: {cur['queries'][name]*1000:.1f}ms")
     t = cur["value"] / base["value"] if base.get("value") else float("nan")
     print(f"TOTAL    {base['value']:.3f}s -> {cur['value']:.3f}s  ({t:.2f}x)")
-    sys.exit(1 if regressions or (cross_state and not allow_contended) else 0)
+    sys.exit(1 if regressions else 0)
 
 
 if __name__ == "__main__":

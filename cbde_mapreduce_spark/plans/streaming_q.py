@@ -137,9 +137,7 @@ def streaming_stateful_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     profiles maintained in the state store across micro-batches
     (streaming/stateful.py::run_stateful_user_profiles). On the bounded
     single-batch backfill each user's final update equals the batch
-    aggregate — the DuckDB oracle. This is the working custom-stateful
-    path in this container (transformWithState needs protobuf; see the
-    module docstring for the pinned repro)."""
+    aggregate — the DuckDB oracle."""
     from cbde_mapreduce_spark.streaming.stateful import run_stateful_user_profiles
 
     return run_stateful_user_profiles(spark, sf_dir)

@@ -54,8 +54,7 @@ REQUIRED_CONF: dict[str, str] = {
 }
 
 #: Scale-posture defaults, applied only when WE build the session (never
-#: re-applied afterwards, so callers may override per run — bench.py turns
-#: AQE off at sf0.1 where its stage-wise re-planning latency dominates).
+#: re-applied afterwards, so callers may override per run).
 DEFAULT_CONF: dict[str, str] = {
     # Runtime re-planning: coalesce small post-shuffle partitions, split skewed
     # join partitions. Free wins at every real scale.

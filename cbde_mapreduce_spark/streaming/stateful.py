@@ -9,19 +9,6 @@ At 100 TB: state lives in the state store partitioned by key (RocksDB
 provider in production); per-batch work is Arrow-batched per key group.
 Unbounded key cardinality needs TTL (timeout) eviction — demonstrated with
 ``GroupStateTimeout.NoTimeout`` here because the fixture backfill is bounded.
-
-``transformWithStateInPandas`` (Spark 4 StatefulProcessor) port: implemented
-below behind ``transform_with_state_available()``. CONTAINER LIMITATION
-(probed rounds 1 and 2): the feature spawns a separate "driver worker"
-Python process (pyspark/sql/streaming/transform_with_state_driver_worker.py)
-whose state-server protocol imports ``google.protobuf``; the ``protobuf``
-package is not installed here (``import google`` → ModuleNotFoundError), so
-every run dies with STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE
-("ImportError: cannot import name 'descriptor' from 'google.protobuf'").
-Minimal repro: any transformWithStateInPandas query, e.g. the test below —
-it auto-skips while the dependency is missing and runs for real once
-``pip install protobuf`` is possible. applyInPandasWithState (above) needs
-no protobuf and is the working keyed-state path in this environment.
 """
 
 from __future__ import annotations
@@ -87,74 +74,6 @@ def run_stateful_user_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return run_to_memory(profiles, "profiles", "update")
-
-
-def transform_with_state_available() -> bool:
-    """True iff transformWithStateInPandas can run here.
-
-    The feature's separate driver-worker process requires ``google.protobuf``
-    (see module docstring); probe the import instead of crashing mid-query.
-    """
-    import importlib.util
-
-    try:
-        # find_spec raises ModuleNotFoundError when the parent package
-        # ('google') itself is absent
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        return False
-
-
-def run_tws_user_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user profile via the Spark 4 ``StatefulProcessor`` API — the
-    transformWithState port of ``run_stateful_user_profiles``.
-
-    Raises RuntimeError with the exact missing dependency when the
-    environment cannot run it (see ``transform_with_state_available``).
-    """
-    if not transform_with_state_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires the 'protobuf' package for "
-            "its driver worker (google.protobuf missing in this environment); "
-            "use run_stateful_user_profiles (applyInPandasWithState) instead"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserProfileProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.acc = handle.getValueState("acc", STATE_SCHEMA)
-
-        def handleInputRows(
-            self, key: tuple[Any, ...], rows: Iterator[pd.DataFrame], timer_values: Any
-        ) -> Iterator[pd.DataFrame]:
-            n, s = self.acc.get() if self.acc.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                v = pdf["value"].dropna()
-                s += int((v * 100).round().astype("int64").sum())
-            self.acc.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [s / 100.0]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    stream = events_stream(spark, sf_dir)
-    profiles = (
-        stream.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            UserProfileProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-    return run_to_memory(profiles, "tws", "update")
 
 
 ATTR_OUTPUT_SCHEMA = "user_id bigint, ts_us bigint, channel string, value double"

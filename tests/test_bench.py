@@ -1,0 +1,40 @@
+"""bench.py times every run from a freshly built plan on a released session."""
+
+from __future__ import annotations
+
+import json
+
+import bench
+
+NAMES = ["q1_pricing_summary", "pagerank_trade_graph"]
+
+
+def _held(spark) -> tuple[bool, int]:
+    """(any cached relation, number of persistent RDDs) in the session."""
+    cached = not spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    return cached, spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_bench_runs_fresh_plans_and_releases_each_step(spark, sf_smoke, monkeypatch):
+    """pagerank caches its edge set while it runs; every step must leave the
+    session with no cached relation and no persistent RDD, and the record
+    must fit on one short line."""
+    held = []
+    timed = bench.time_fresh
+
+    def checked(spark_, sf_dir, name):
+        sample = timed(spark_, sf_dir, name)
+        held.append((name, *_held(spark)))
+        return sample
+
+    monkeypatch.setattr(bench, "time_fresh", checked)
+    spark.range(3).cache().count()  # state left by an earlier caller
+    record, samples = bench.run(spark, sf_smoke, NAMES, [], runs=1)
+
+    assert held == [(n, False, 0) for n in NAMES * 2]  # warm pass + 1 measured
+    line = json.dumps(record)
+    assert len(line) < 1900
+    assert {"value", "cpu_s", "queries"} <= record.keys()
+    assert list(record["queries"]) == NAMES and record["tracked"] == {}
+    assert abs(record["value"] - sum(samples[n][0]["run_s"] for n in NAMES)) < 1e-3
+    assert samples["pagerank_trade_graph"][0]["cpu_s"] > 0

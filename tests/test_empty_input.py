@@ -14,6 +14,10 @@ Known engine divergence (allowlisted): Spark's CUBE/ROLLUP emit NO rows on
 an empty input, while DuckDB (per the SQL standard for the () grouping
 set) emits the one grand-total row aggregating the empty relation. This is
 Spark engine behavior, not a plan defect.
+
+Each sweep is parametrized by registry name, so a failure names its query
+and ``pytest tests/test_empty_input.py -m "slow or not slow" -k <name>``
+runs one query's three sweeps.
 """
 
 from __future__ import annotations
@@ -47,31 +51,26 @@ def empty_sf_dir(tmp_path_factory) -> str:
     return str(d)
 
 
-def test_every_query_survives_empty_input(spark, empty_sf_dir):
-    crashes: dict[str, str] = {}
-    mismatches: dict[str, str] = {}
-    for name, spec in sorted(REGISTRY.items()):
-        try:
-            n_spark = len(spec.fn(spark, empty_sf_dir).collect())
-        except Exception as e:  # noqa: BLE001 — collecting a full report
-            crashes[name] = f"{type(e).__name__}: {str(e).splitlines()[0][:120]}"
-            continue
-        if not spec.oracle or name in _KNOWN_EMPTY_DIVERGENCE:
-            continue
-        con = duckdb.connect()
-        try:
-            for t in TABLES:
-                con.sql(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"'{empty_sf_dir}/{t}.parquet'"
-                )
-            n_oracle = len(con.sql(spec.oracle).fetchall())
-        finally:
-            con.close()
-        if n_spark != n_oracle:
-            mismatches[name] = f"spark={n_spark} oracle={n_oracle}"
-    assert not crashes, f"queries crashing on empty input: {crashes}"
-    assert not mismatches, f"empty-input row divergence: {mismatches}"
+def _row_counts_agree(spark, sf_dir: str, name: str, check_oracle: bool = True) -> None:
+    """Registry query ``name`` runs on ``sf_dir`` and, when oracled, returns
+    as many rows as its DuckDB twin."""
+    spec = REGISTRY[name]
+    n_spark = len(spec.fn(spark, sf_dir).collect())
+    if not spec.oracle or not check_oracle:
+        return
+    con = duckdb.connect()
+    try:
+        for t in TABLES:
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        n_oracle = len(con.sql(spec.oracle).fetchall())
+    finally:
+        con.close()
+    assert n_spark == n_oracle, f"{name}: spark={n_spark} oracle={n_oracle}"
+
+
+@pytest.mark.parametrize("name", sorted(REGISTRY))
+def test_every_query_survives_empty_input(spark, empty_sf_dir, name):
+    _row_counts_agree(spark, empty_sf_dir, name, name not in _KNOWN_EMPTY_DIVERGENCE)
 
 
 def test_empty_divergence_allowlist_is_not_stale():
@@ -137,55 +136,11 @@ def null_sf_dir(tmp_path_factory) -> str:
     return str(d)
 
 
-def test_every_query_survives_null_input(spark, null_sf_dir):
-    crashes: dict[str, str] = {}
-    mismatches: dict[str, str] = {}
-    for name, spec in sorted(REGISTRY.items()):
-        try:
-            n_spark = len(spec.fn(spark, null_sf_dir).collect())
-        except Exception as e:  # noqa: BLE001 — collecting a full report
-            crashes[name] = f"{type(e).__name__}: {str(e).splitlines()[0][:120]}"
-            continue
-        if not spec.oracle:
-            continue
-        con = duckdb.connect()
-        try:
-            for t in TABLES:
-                con.sql(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"'{null_sf_dir}/{t}.parquet'"
-                )
-            n_oracle = len(con.sql(spec.oracle).fetchall())
-        finally:
-            con.close()
-        if n_spark != n_oracle:
-            mismatches[name] = f"spark={n_spark} oracle={n_oracle}"
-    assert not crashes, f"queries crashing on NULL input: {crashes}"
-    assert not mismatches, f"NULL-input row divergence: {mismatches}"
+@pytest.mark.parametrize("name", sorted(REGISTRY))
+def test_every_query_survives_null_input(spark, null_sf_dir, name):
+    _row_counts_agree(spark, null_sf_dir, name)
 
 
-def test_every_query_survives_one_row_input(spark, one_row_sf_dir):
-    crashes: dict[str, str] = {}
-    mismatches: dict[str, str] = {}
-    for name, spec in sorted(REGISTRY.items()):
-        try:
-            n_spark = len(spec.fn(spark, one_row_sf_dir).collect())
-        except Exception as e:  # noqa: BLE001 — collecting a full report
-            crashes[name] = f"{type(e).__name__}: {str(e).splitlines()[0][:120]}"
-            continue
-        if not spec.oracle:
-            continue
-        con = duckdb.connect()
-        try:
-            for t in TABLES:
-                con.sql(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"'{one_row_sf_dir}/{t}.parquet'"
-                )
-            n_oracle = len(con.sql(spec.oracle).fetchall())
-        finally:
-            con.close()
-        if n_spark != n_oracle:
-            mismatches[name] = f"spark={n_spark} oracle={n_oracle}"
-    assert not crashes, f"queries crashing on 1-row input: {crashes}"
-    assert not mismatches, f"1-row-input row divergence: {mismatches}"
+@pytest.mark.parametrize("name", sorted(REGISTRY))
+def test_every_query_survives_one_row_input(spark, one_row_sf_dir, name):
+    _row_counts_agree(spark, one_row_sf_dir, name)

@@ -2,15 +2,10 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from cbde_mapreduce_spark.sources import load_table
-from cbde_mapreduce_spark.streaming.stateful import (
-    run_stateful_user_profiles,
-    run_tws_user_profiles,
-    transform_with_state_available,
-)
+from cbde_mapreduce_spark.streaming.stateful import run_stateful_user_profiles
 
 
 def test_stateful_profiles_match_batch(spark, sf_smoke):
@@ -32,35 +27,3 @@ def test_stateful_profiles_match_batch(spark, sf_smoke):
     assert len(merged) == len(want)
     assert (merged.n_events_s == merged.n_events_b).all()
     assert (abs(merged.sum_value_s - merged.sum_value_b) < 1e-9).all()
-
-
-@pytest.mark.skipif(
-    not transform_with_state_available(),
-    reason="transformWithStateInPandas driver worker needs google.protobuf, "
-    "not installed in this container (see streaming/stateful.py docstring)",
-)
-def test_tws_profiles_match_batch(spark, sf_smoke):
-    """Spark 4 StatefulProcessor port — runs wherever protobuf exists."""
-    got = run_tws_user_profiles(spark, sf_smoke).toPandas()
-    final = got.groupby("user_id").last().reset_index()
-    want = (
-        load_table(spark, sf_smoke, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .toPandas()
-    )
-    merged = final.merge(want, on="user_id", suffixes=("_s", "_b"))
-    assert len(merged) == len(want)
-    assert (merged.n_events_s == merged.n_events_b).all()
-
-
-def test_tws_unavailable_raises_actionable_error(spark, sf_smoke):
-    """When protobuf is missing the port must fail loudly and name both the
-    missing dependency and the working fallback."""
-    if transform_with_state_available():
-        pytest.skip("protobuf present — the guarded path runs for real here")
-    with pytest.raises(RuntimeError, match="protobuf"):
-        run_tws_user_profiles(spark, sf_smoke)

@@ -37,7 +37,7 @@ def test_stream_matches_batch_tumbling(spark, sf_smoke):
     assert got.equals(want)
 
 
-def test_watermark_append_mode_emits_closed_windows(spark, sf_smoke):
+def test_watermark_append_mode_emits_closed_windows(spark, sf_smoke, tmp_path):
     """Append mode + watermark: only watermark-closed windows are emitted in
     a bounded run; the emitted subset must agree with the batch result."""
     stream = events_stream(spark, sf_smoke)
@@ -56,7 +56,7 @@ def test_watermark_append_mode_emits_closed_windows(spark, sf_smoke):
         .queryName(sink)
         .outputMode("append")
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_wm_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     q.awaitTermination()
@@ -72,7 +72,7 @@ def test_watermark_append_mode_emits_closed_windows(spark, sf_smoke):
     assert (merged.n_s == merged.n_b).all()
 
 
-def test_stream_stream_interval_join(spark, sf_smoke):
+def test_stream_stream_interval_join(spark, sf_smoke, tmp_path):
     """Stream-stream equi+interval join with watermarks (append mode):
     every emitted pair must appear in the equivalent batch join."""
     from cbde_mapreduce_spark.sources import load_table
@@ -102,7 +102,7 @@ def test_stream_stream_interval_join(spark, sf_smoke):
         .queryName(sink)
         .outputMode("append")
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_ssj_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     q.awaitTermination()
@@ -159,7 +159,7 @@ def test_incremental_directory_ingest_matches_batch(spark, sf_smoke, tmp_path):
         .queryName(sink)
         .outputMode("complete")
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_ingest_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     q.awaitTermination()
@@ -198,7 +198,7 @@ def test_foreach_batch_parquet_sink(spark, sf_smoke, tmp_path):
     q = (
         stream.writeStream.foreachBatch(write_batch)
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_fb_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     q.awaitTermination()
@@ -223,7 +223,7 @@ def test_streaming_dedup_matches_batch_distinct(spark, sf_smoke):
     assert got.n_users.to_dict() == batch.n_users.to_dict()
 
 
-def test_drop_duplicates_within_watermark_bounds_state(spark, sf_smoke):
+def test_drop_duplicates_within_watermark_bounds_state(spark, sf_smoke, tmp_path):
     """dropDuplicatesWithinWatermark: the unbounded-deployment dedup — state
     is evictable past the lateness horizon, and on the bounded fixture (all
     rows inside one run) it must still drop every in-horizon duplicate."""
@@ -239,7 +239,7 @@ def test_drop_duplicates_within_watermark_bounds_state(spark, sf_smoke):
         .queryName(sink)
         .outputMode("append")
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_wmd_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     q.awaitTermination()
@@ -256,7 +256,7 @@ def test_drop_duplicates_within_watermark_bounds_state(spark, sf_smoke):
     assert len(got) <= load_table(spark, sf_smoke, "events").count()
 
 
-def test_streaming_session_window_matches_batch(spark, sf_smoke):
+def test_streaming_session_window_matches_batch(spark, sf_smoke, tmp_path):
     """Native session_window on the live stream (update mode, watermark) ==
     the batch session_window twin on the same bounded data."""
     stream = events_stream(spark, sf_smoke).withColumn(
@@ -278,7 +278,7 @@ def test_streaming_session_window_matches_batch(spark, sf_smoke):
         .queryName(sink)
         .outputMode("complete")
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_sess_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     q.awaitTermination()
@@ -349,7 +349,7 @@ def test_streaming_restart_exactly_once(spark, sf_smoke, tmp_path):
     assert sink.select("event_id").distinct().count() == 2 * n1
 
 
-def test_stream_static_join_matches_batch(spark, sf_smoke):
+def test_stream_static_join_matches_batch(spark, sf_smoke, tmp_path):
     """Stream-static enrichment: the live event stream joins a STATIC
     dimension (per-user total order spend) without watermarks — the static
     side is re-read per micro-batch, planned as a broadcast. Result must
@@ -374,7 +374,7 @@ def test_stream_static_join_matches_batch(spark, sf_smoke):
         .queryName(sink)
         .outputMode("complete")
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_ssj_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     q.awaitTermination()
@@ -432,7 +432,7 @@ def test_foreach_batch_streaming_merge_upsert(spark, sf_smoke, tmp_path):
         events_stream(spark, sf_smoke)
         .select("user_id", "value", "ts_ns")
         .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_merge_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )

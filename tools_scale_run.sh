@@ -4,6 +4,8 @@
 # deliberately quadratic oracle at 100x data -- is bounded by a hard
 # timeout without stalling the rest of the study.
 #
+# The queries are bench.py's HEADLINE. Run from the repository root.
+#
 # Usage: sh tools_scale_run.sh <sf_dir> <out_prefix> [timeout_s]
 # Appends "<query> <median_ms>" (or "<query> TIMEOUT"/"<query> ERROR")
 # to <out_prefix>.spark.txt / <out_prefix>.duckdb.txt.
@@ -11,11 +13,7 @@ set -u
 SF_DIR=$1
 OUT=$2
 TMO=${3:-600}
-QUERIES="q1_pricing_summary q3_shipping_priority q5_local_supplier \
-wordcount_documents topk_window_per_user sessionize_events \
-cosine_topk_similarity dedup_exact_docs q7_nation_volume \
-scd2_customer_status pack_sequences_chunked sparse_cosine_topk_docs \
-pagerank_trade_graph"
+QUERIES=$(python -c "import bench; print(' '.join(bench.HEADLINE))") || exit 1
 
 for ENGINE in spark duckdb; do
   F="$OUT.$ENGINE.txt"

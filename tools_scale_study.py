@@ -6,12 +6,13 @@ shell can put a hard `timeout` around any single run (a deliberately
 quadratic exact twin or a recursive-CTE oracle can be unbounded at 100x
 data without stalling the study). Prints ONE line: `<query> <median_ms>`.
 
-Methodology matches bench.py: build/plan once, then median of 3 warm
-materialized executions (Spark: Arrow toPandas; DuckDB: fetchall on a
-fresh cursor over persistent views). Spark shuffle partitions are sized by
-bench.py's data-volume rule. Each process starts its own JVM: 6-7 s to a
-first trivial query from the driver's class-data-sharing archive
-(session.py), 12-13 s without one, on 4 vCPUs.
+Spark: bench.py's routine on a ``get_spark()`` session with the engine's
+defaults: one unmeasured run, then the median of 3 runs, each from a freshly
+built plan with nothing cached, of wall time less hypervisor steal. DuckDB:
+one dropped run, then the median of 3 ``fetchall`` runs over persistent
+views. Each process starts its own JVM: 6-7 s to a first trivial query from
+the driver's class-data-sharing archive (session.py), 12-13 s without one,
+on 4 vCPUs.
 
 Usage:
     python tools_scale_study.py spark  /root/repo/.scratch/sf1 q1_pricing_summary
@@ -30,32 +31,14 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 RUNS = 3
 
 
-def _sf_of(sf_dir: str) -> float:
-    base = os.path.basename(sf_dir.rstrip("/"))
-    return float(base.removeprefix("sf") or "0.1")
-
-
 def time_spark(sf_dir: str, name: str) -> float:
-    from bench import _shuffle_partitions_for
-    from cbde_mapreduce_spark.plans import REGISTRY
+    import bench
     from cbde_mapreduce_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(
-        app_name="scale-study",
-        shuffle_partitions=_shuffle_partitions_for(_sf_of(sf_dir), cpus),
-        extra_conf={"spark.sql.adaptive.enabled": "false"},
-    )
+    spark = get_spark(app_name="scale-study")
     spark.sparkContext.setLogLevel("ERROR")
-    df = REGISTRY[name].fn(spark, sf_dir)
-    df.schema  # force analysis (plan build off the clock, like bench.py)
-    samples = []
-    for i in range(RUNS + 1):  # first run warms codegen/workers, dropped
-        t0 = time.perf_counter()
-        df.toPandas()
-        if i:
-            samples.append(time.perf_counter() - t0)
-    return statistics.median(samples) * 1000
+    record, _ = bench.run(spark, sf_dir, [name], [], RUNS)
+    return record["value"] * 1000
 
 
 def time_duckdb(sf_dir: str, name: str) -> float:

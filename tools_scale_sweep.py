@@ -75,17 +75,10 @@ def _jvm_dead(e: Exception) -> bool:
 
 
 def worker(sf_dir: str, tmo: float, names: list[str]) -> None:
-    from bench import _shuffle_partitions_for
     from cbde_mapreduce_spark.plans import REGISTRY
     from cbde_mapreduce_spark.session import get_spark
 
-    base = os.path.basename(sf_dir.rstrip("/"))
-    sf = float(base.removeprefix("sf") or "0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(
-        app_name="scale-sweep",
-        shuffle_partitions=_shuffle_partitions_for(sf, cpus),
-    )
+    spark = get_spark(app_name="scale-sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
     for name in names:
