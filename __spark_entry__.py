@@ -5,6 +5,17 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
 value-hash -> CORRECTNESS_r{N}.json).
 
+The driver value-checks only the first 50 names, so both dicts follow one
+computed order, read from the driver's own ``CORRECTNESS_r*.json`` files and
+the generated ``PLANS.json`` and never from Spark. A name's last check is the
+latest round in which it was hash-green, or ``no_oracle`` for a rows-only
+name; a red row is no check. First come the names whose plan fingerprint is
+newer than their last check (``PLANS.json`` ``since`` later than it), then the
+never-checked names, then every other name stalest first; at a tie rows-only
+names follow hashed ones, then names sort by name. After a plan change the
+default test tier fails until ``python -m tests.registry_pass`` regenerates
+``PLANS.json``, which marks each changed name for the next driver round.
+
 All real logic lives in ``cbde_mapreduce_spark``; this module only adapts the
 query registry (cbde_mapreduce_spark/plans/registry.py) to the driver's
 interface.
@@ -12,336 +23,57 @@ interface.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _ROOT)
 
 from cbde_mapreduce_spark.plans import REGISTRY  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
-#: The driver oracle-checks only the FIRST 50 entries of queries() (observed
-#: rounds 1-6). The registry is emitted in a rotating priority order so every
-#: query earns a driver-green row across rounds; ROTATION.md records which
-#: names sat in each round's window.
-#:
-#: Round-13 window (VERDICT r12 ask #1): the 10 queries whose PLANS changed
-#: in the round-12 optimization pass lead — the driver's oracle has never
-#: seen the new symmetrize-free / persisted-layout / gated-dispatch plans,
-#: and the changed-name rule now covers changed plans, not just changed
-#: oracle texts. The remaining 40 slots take the head of the planned r13
-#: window from ROTATION.md (the stalest round-8/9-vintage evidence),
-#: skipping the two graph names already staged by the plan-change rule and
-#: the one rows-only name (hll_rollup_daily_users — a hash row beats a
-#: rows-only row; it heads the r14 tail instead). ROTATION.md "Round 13".
-_PRIORITY = [
-    "pagerank_trade_graph",
-    "bfs_hops_trade_graph",
-    "ppr_trade_recommendations",
-    "sssp_trade_graph",
-    "hits_authority_suppliers",
-    "degree_histogram_trade_graph",
-    "degree_assortativity",
-    "dedup_canonical_docs",
-    "neardup_components",
-    "cosine_topk_similarity",
-    "psi_order_value_drift",
-    "concurrent_sessions_peak",
-    "rolling_corr_value",
-    "knn_label_accuracy",
-    "largest_remainder_quota",
-    "winsorize_order_value",
-    "mutual_information_events",
-    "chunk_overlap_docs",
-    "event_trigram_paths",
-    "boilerplate_prefixes_docs",
-    "funnel_ttc_percentiles",
-    "cep_pattern_matches",
-    "sample_k_per_group",
-    "weighted_median_price",
-    "decimal_exact_revenue",
-    "ab_test_conversion",
-    "stratified_split_quota",
-    "bm25_topk_docs",
-    "ks_binned_order_drift",
-    "clustering_coeff_cosupplier",
-    "ntile_percentile_orders",
-    "kmv_distinct_customers",
-    "activity_bitmask_users",
-    "asof_forward_next_click",
-    "assoc_rules_event_pairs",
-    "audience_overlap_matrix",
-    "benford_digit_audit",
-    "business_days_to_ship",
-    "collation_distinct_segments",
-    "corpus_prep_pipeline",
-    "cumulative_distinct_users",
-    "daily_value_envelope",
-    "diff_in_diff_orders",
-    "dp_laplace_counts",
-    "exact_median_selection",
-    "feature_hash_docs",
-    "gapfill_weekly_orders",
-    "hard_negative_mining",
-    "hybrid_rrf_retrieval",
-    "int8_quantization_stats",
-]
 
-#: Everything outside the window, ordered by evidence staleness: the
-#: planned-r13 names displaced by the plan-change rule plus the rows-only
-#: hll_rollup_daily_users first (they head the r14 window), then the
-#: remaining unchanged names oldest-evidence-first, and finally the
-#: round-12 window (the freshest rows, moved to the back).
-_STALENESS_TAIL = [
-    "hll_rollup_daily_users",
-    "jl_projection_distortion",
-    "k_anonymity_audit",
-    "kaplan_meier_customers",
-    "knn_confusion_matrix",
-    "kwic_concordance",
-    "lateral_top_customers_per_nation",
-    "listagg_priority_profile",
-    "mode_event_type_per_user",
-    "monthly_seasonality_index",
-    "pack_sequences_split",
-    "point_in_time_status_join",
-    "postings_delta_stats",
-    "range_fingerprint_orders",
-    "referential_integrity_audit",
-    "rfm_segmentation",
-    "rle_event_runs",
-    "segment_ttests_bonferroni",
-    "streaming_attribution",
-    "streaming_interval_join",
-    "table_diff_cdc",
-    "temperature_mix_sample",
-    "udtf_table_arg_lang_stats",
-    "variant_props_extract",
-    "woe_iv_binning_orders",
-    "embedding_isotropy",
-    "hll_intersect_estimate",
-    "mg_heavy_hitter_words",
-    "pca_top_component",
-    "phash_neardup_media",
-    "sparse_cosine_topk_docs",
-    "binned_range_join_orders",
-    "edit_distance_neardup",
-    "ngram_jaccard_pairs",
-    "neardup_components_star",
-    "sorted_neighborhood_neardup",
-    "bpe_merges_vocab",
-    "cosine_topk_sharded",
-    "cosine_topk_hof",
-    "maxsim_label_topk",
-    "maxsim_label_sharded",
-    "mips_topk_augmented",
-    "embedding_neardup_pairs",
-    "ann_lsh_topk",
-    "embedding_neardup_lsh",
-    "ivf_ann_topk",
-    "ivf_pq_topk",
-    "ivf_pq_rerank_topk",
-    "ivf_rpq_topk",
-    "pq_adc_topk",
-    "approx_distinct_users",
-    "approx_percentile_values",
-    "argmax_order_per_customer",
-    "array_funcs_embeddings",
-    "count_distinct_by_status",
-    "cross_join_region_segments",
-    "dataset_split_assignment",
-    "date_format_buckets",
-    "datetime_funcs_orders",
-    "dedup_exact_docs",
-    "dedup_exact_keep_first",
-    "distinct_segment_nation",
-    "doc_fingerprint",
-    "except_all_priorities",
-    "explode_doc_tokens",
-    "filter_project_orders",
-    "first_last_event_per_user",
-    "freq_items_words",
-    "full_outer_nation_activity",
-    "grouped_agg_pandas_median",
-    "hash_functions_docs",
-    "having_busy_suppliers",
-    "histogram_event_types",
-    "intersect_nation_keys",
-    "json_props_extract",
-    "kmeans_clusters",
-    "lag_lead_event_values",
-    "substring_dup_spans",
-    "arrow_grouped_minmax_norm",
-    "arrow_map_doc_stats",
-    "udtf_analyze_ngrams",
-    "like_rlike_filter",
-    "map_literal_region_lookup",
-    "multimodal_binary_features",
-    "anti_join_inactive_customers",
-    "asof_join_purchase_click",
-    "collect_set_priorities",
-    "except_nation_keys",
-    "null_predicates_unmatched",
-    "percentiles_order_value",
-    "pivot_user_event_matrix",
-    "python_udtf_tokenize",
-    "q16_supplier_part_counts",
-    "q18_large_orders",
-    "q2_cheapest_part_per_type",
-    "q4_priority_late_ship",
-    "quality_score_docs",
-    "range_join_ship_lag",
-    "rank_customers_in_nation",
-    "regexp_json_extract_events",
-    "right_outer_supplier_items",
-    "rollup_lineitem_flags",
-    "semi_join_active_customers",
-    "sessionize_events",
-    "string_funcs_customer",
-    "contrastive_negatives_ring",
-    "minhash_lsh_neardup",
-    "simhash_fingerprints",
-    "tfidf_top_terms",
-    "token_stats_per_doc",
-    "top50_parts_ranked",
-    "topk_window_per_user",
-    "union_all_parties",
-    "union_distinct_nations",
-    "unpivot_event_matrix",
-    "wordcount_documents",
-    "bpe_regex_token_counts",
-    "chunk_dedup_docs",
-    "cohort_retention_purchases",
-    "data_quality_checks",
-    "decontaminate_docs",
-    "domain_mix_sample",
-    "event_transition_matrix",
-    "frame_sample_stats",
-    "funnel_user_day",
-    "global_rank_prefix_orders",
-    "incremental_dedup_docs",
-    "inverted_index_terms",
-    "mad_outlier_orders",
-    "pack_sequences_chunked",
-    "pmi_bigrams_top",
-    "q12_shipmode_priority",
-    "q13_order_distribution",
-    "q20_excess_stock_suppliers",
-    "q21_waiting_supplier",
-    "repetition_ratio_docs",
-    "scd2_customer_status",
-    "seq_len_histogram",
-    "skyline_orders",
-    "sliding_distinct_users",
-    "cm_sketch_heavy_hitters",
-    "streaming_sliding_counts",
-    "time_weighted_avg_user",
-    "token_entropy_docs",
-    "heaps_law_fit",
-    "lang_id_lexicon",
-    "attribution_last_touch",
-    "expected_clv_curve",
-    "count_if_priority_orders",
-    "ohlc_bars_events",
-    "zipf_tail_index",
-    "streaming_ohlc_bars",
-    "gini_customer_revenue",
-    "key_skew_profile",
-    "chi2_event_weekday",
-    "incremental_join_maintenance",
-    "abc_analysis_parts",
-    "null_safe_join_types",
-    "decile_histogram_orders",
-    "streaming_session_counts",
-    "monthly_revenue_growth",
-    "anova_f_segments",
-    "bigram_lm_score_docs",
-    "bootstrap_ci_order_value",
-    "chunk_size_study",
-    "cogroup_order_reconciliation",
-    "conformal_interval_orders",
-    "cr10_concentration_by_year",
-    "cusum_drift_users",
-    "decay_weighted_user_value",
-    "ewma_user_value",
-    "forward_fill_user_values",
-    "grouped_elasticity_slopes",
-    "hierarchical_time_rollup",
-    "incremental_agg_merge",
-    "interevent_burstiness",
-    "markov_perplexity_users",
-    "new_vs_returning_revenue",
-    "ols_normal_equations",
-    "pipe_syntax_revenue",
-    "rank_movers_parts",
-    "ratio_to_report_nation_revenue",
-    "revenue_bridge_decomposition",
-    "seasonal_decompose_daily",
-    "source_divergence_matrix",
-    "streaming_stateful_profiles",
-    "theil_sen_trend_daily",
-    "capped_running_balance",
-    "window_count_distinct_rewrite",
-    "window_dedup_events",
-    "conditional_case_orders",
-    "cube_orders_status_priority",
-    "global_agg_lineitem",
-    "grouped_map_zscore",
-    "item_item_cf_topk",
-    "left_outer_order_counts",
-    "math_funcs_lineitem",
-    "moving_avg_user_value",
-    "pandas_udf_net_revenue",
-    "profile_lineitem_columns",
-    "q10_returned_revenue",
-    "q14_promo_share",
-    "q19_disjunctive_revenue",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "q6_forecast_revenue",
-    "running_revenue_per_customer",
-    "salted_agg_event_types",
-    "session_window_events",
-    "sliding_window_events",
-    "sql_entry_revenue_by_nation",
-    "stats_agg_lineitem",
-    "streaming_tumbling_counts",
-    "theta_join_price_bands",
-    "tumbling_hourly_events",
-    "curriculum_buckets_docs",
-    "grouping_sets_orders",
-    "merge_upsert_customers",
-    "q11_important_stock",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q22_global_sales_opportunity",
-    "q7_nation_volume",
-    "q8_market_share",
-    "q9_product_type_profit",
-    "range_frame_hourly_sum",
-    "regr_aggs_lineitem",
-    "safe_cast_mixed_events",
-    "salted_join_order_priority",
-    "source_cap_sample",
-    "stopword_array_ops_docs",
-    "streaming_dedup_users",
-    "table_fingerprint_orders",
-    "triangle_count_cosupplier",
-    "bool_bit_aggs_lineitem",
-    "intersect_all_priorities",
-]
+def _evidence(root: str) -> dict[int, dict[str, dict]]:
+    """The driver's per-name rows, by round, from ``CORRECTNESS_r<N>.json``."""
+    rounds = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        with open(path) as f:
+            rounds[int(path.rsplit("_r", 1)[1].split(".")[0])] = json.load(f)
+    return rounds
 
-def _ordered_names() -> list[str]:
-    """Priority window first, then the rest by staleness (never-checked
-    first), with a sorted fallback for any name the frozen lists miss."""
-    listed = [n for n in _PRIORITY + _STALENESS_TAIL if n in REGISTRY]
-    rest = sorted(n for n in REGISTRY if n not in set(listed))
-    return listed + rest
+
+def _last_checks(rounds: dict[int, dict[str, dict]]) -> dict[str, int]:
+    """Each name's latest green round: hash-green, or ``no_oracle`` for a
+    rows-only name. A red row is no check."""
+    last: dict[str, int] = {}
+    for rnd, rows in rounds.items():
+        for name, row in rows.items():
+            rows_only = name in REGISTRY and REGISTRY[name].oracle is None
+            if row.get("hash_match") is True or (rows_only and row.get("err") == "no_oracle"):
+                last[name] = max(last.get(name, rnd), rnd)
+    return last
+
+
+def _ordered_names(root: str = _ROOT) -> list[str]:
+    """Every registry name once: plan changed since its last check, then
+    never checked, then stalest first; rows-only after hashed at a tie."""
+    last = _last_checks(_evidence(root))
+    with open(os.path.join(root, "PLANS.json")) as f:
+        plans = json.load(f)
+
+    def key(name: str) -> tuple:
+        seen = last.get(name)
+        since = plans.get(name, {}).get("since", 0)
+        group = 1 if seen is None else 0 if since > seen else 2
+        return group, seen or 0, REGISTRY[name].oracle is None, name
+
+    return sorted(REGISTRY, key=key)
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -7,11 +7,12 @@ Prints ONE JSON line:
      "cpu_s": ..., "stolen_s": ..., "queries": {"q1_pricing_summary": sec, ...},
      "tracked": {...}, "sf": 0.1, "planning_sec": ..., ...}
 
-Method: one ``get_spark()`` session with the engine's own defaults
-(``SPARK_GRAFT_CPUS`` sets its width). Every run goes through ``time_fresh``:
-release the cached tables and every persistent RDD, build the plan from the
-registry off the clock, then time ``toPandas()`` over the whole plan, so each
-run executes every shuffle stage and reuses nothing an earlier run left. One
+Method: one ``get_spark()`` session with the engine's own defaults, as wide
+as the cores the process may run on (``SPARK_GRAFT_CPUS`` overrides the
+width). Every run goes through ``time_fresh``: release the cached tables and
+every persistent RDD, build the plan from the registry off the clock, then
+time ``toPandas()`` over the whole plan, so each run executes every shuffle
+stage and reuses nothing an earlier run left. One
 unmeasured pass over all names warms the JVM, codegen and the Python workers;
 ``RUNS`` measured passes follow. A name's time is its median over the
 measured passes of wall time less the hypervisor's steal (``/proc/stat``,

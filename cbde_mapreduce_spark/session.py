@@ -3,10 +3,10 @@
 100 TB posture (SURVEY.md §4): AQE on (runtime re-planning, skew-join
 mitigation, post-shuffle partition coalescing), Arrow transfers for any
 pandas interchange, UTC session timezone so event-time arithmetic is
-deterministic across environments. The master defaults to ``local[32]`` and
-shuffle partitions to 32 on any box (``SPARK_GRAFT_CPUS`` defaults to 32, and
-partitions to that count capped at 32); perfbench sets ``SPARK_GRAFT_CPUS`` to
-the cores it may use. On a real cluster partitions are set via
+deterministic across environments. The master is ``local[N]`` and shuffle
+partitions are N capped at 32, where N is ``SPARK_GRAFT_CPUS`` or, unset, the
+cores this process may run on (``os.sched_getaffinity``, the count perfbench
+also pins). On a real cluster partitions are set via
 ``SPARK_SHUFFLE_PARTITIONS`` (rule of thumb: 2-3x total executor cores, and
 AQE coalesces the excess).
 
@@ -246,7 +246,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = int(

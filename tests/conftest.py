@@ -30,3 +30,12 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_oracle() -> str:
     return SF_ORACLE
+
+
+@pytest.fixture(scope="session")
+def registry_pass(spark, sf_smoke):
+    """Every registry name built and executed once at sf0.001, with its
+    executed plan and normalized execution plans (tests/registry_pass.py)."""
+    from tests.registry_pass import run_pass
+
+    return run_pass(spark, sf_smoke)

@@ -30,7 +30,7 @@ def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
     con = duckdb.connect()
     try:
         for t in TABLES:
-            # both fixture layouts (ROTATION.md round-5 sixth regime): a
+            # both fixture layouts (FIXTURES.md "Table layouts"): a
             # single file, or a directory of part files as written at scale
             # (tools_scale_gen, partitioned sinks) — Spark's loaders handle
             # both, so the oracle side must too. Recursive glob so a

@@ -4,7 +4,7 @@
 Persisted and checkpointed blocks live until released, so a long session
 running many iterative queries used to accumulate every round's superseded
 state (a 25-heavy-query session OOMed at position ~22 while each query
-passed in isolation, ROTATION.md round-6 closing re-probe). These tests pin
+passed in isolation). These tests pin
 the scope's rules: a superseded round is released once its successor
 materializes, so one query leaves behind at most its FINAL state, and a
 loop that raises mid-way leaves nothing. BPE is swept too: its merge rounds

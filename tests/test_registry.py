@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import json
 import re
 
 from cbde_mapreduce_spark.plans import REGISTRY
@@ -34,39 +35,73 @@ def test_oracles_reference_only_fixture_tables():
         assert not unknown, f"{name}: oracle references unknown relations {unknown}"
 
 
-def test_driver_window_is_valid():
-    """__spark_entry__._PRIORITY must hold exactly 50 existing names — a
-    typo would silently shrink the driver's correctness window. A window
-    may deliberately stage rows-only names (their no_oracle driver row
-    beats another round of nothing — ROTATION.md records each round's
-    staging); every other window slot must be an oracled query. Round 10
-    stages none: the two former rows-only LSH-sketch names graduated to
-    md5-portable oracled queries this round and lead the window as
-    changed-oracled names."""
+def _order(tmp_path, evidence: dict[int, dict[str, dict]], plans: dict) -> list[str]:
+    """The driver order computed over synthetic CORRECTNESS_r*.json rounds
+    and a synthetic PLANS.json."""
     import __spark_entry__ as E
 
-    P = E._PRIORITY
-    assert len(P) == 50
-    assert len(set(P)) == 50, "duplicate names in the window"
-    staged_rows_only: set[str] = set()
-    for n in P:
-        assert n in REGISTRY, f"window name {n} not in registry"
-        if n not in staged_rows_only:
-            assert REGISTRY[n].oracle, f"window name {n} has no oracle"
+    for rnd, rows in evidence.items():
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+    (tmp_path / "PLANS.json").write_text(json.dumps(plans))
+    return E._ordered_names(str(tmp_path))
 
 
-def test_staleness_tail_covers_registry():
-    """_PRIORITY + _STALENESS_TAIL must partition the registry exactly, so
-    queries() emits every query once and in the intended drain order."""
+def _green(names) -> dict[str, dict]:
+    """Driver rows for ``names`` as a green round writes them."""
+    return {
+        n: {"hash_match": None, "err": "no_oracle"}
+        if REGISTRY[n].oracle is None
+        else {"hash_match": True, "err": None}
+        for n in names
+    }
+
+
+_ROWS_ONLY = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
+_HASHED = sorted(n for n, s in REGISTRY.items() if s.oracle is not None)
+
+
+def test_driver_order_covers_registry_once():
+    """queries() emits every registry name exactly once, and oracle_sql()
+    follows the same order, on the committed evidence and PLANS.json."""
     import __spark_entry__ as E
 
-    listed = E._PRIORITY + E._STALENESS_TAIL
-    assert len(listed) == len(set(listed)), "duplicates across window+tail"
-    assert set(listed) == set(REGISTRY), (
-        set(REGISTRY) ^ set(listed)
-    )
-    # VERDICT r11 ask #9: _ordered_names() has a sorted-order fallback for
-    # names the frozen lists miss; pin that the fallback NEVER engages —
-    # the emitted order must be exactly the frozen lists, so a rename or
-    # late registration can't silently reshuffle the driver window.
-    assert E._ordered_names() == listed
+    order = E._ordered_names()
+    assert len(order) == len(set(order)) and set(order) == set(REGISTRY)
+    assert list(E.queries()) == order
+    assert list(E.oracle_sql()) == [n for n in order if REGISTRY[n].oracle]
+
+
+def test_driver_order_changed_then_never_checked_then_stalest(tmp_path):
+    changed, never, stale, fresh = _HASHED[:4]
+    evidence = {
+        5: _green(n for n in REGISTRY if n != never),
+        7: _green([changed, fresh]),
+    }
+    plans = {changed: {"fp": "a", "since": 8}, fresh: {"fp": "b", "since": 7}}
+    order = _order(tmp_path, evidence, plans)
+    assert order[:2] == [changed, never]
+    assert order.index(stale) < order.index(fresh) == len(order) - 1
+
+
+def test_driver_order_red_row_is_no_check(tmp_path):
+    a, b = _HASHED[:2]
+    red = {"hash_match": False, "err": None}
+    evidence = {5: _green(REGISTRY), 6: _green([a]), 9: {b: red}}
+    order = _order(tmp_path, evidence, {})
+    assert order.index(b) < order.index(a)
+    # a no_oracle row is a check only for a rows-only name
+    evidence[9] = {b: {"hash_match": None, "err": "no_oracle"}}
+    order = _order(tmp_path, evidence, {})
+    assert order.index(b) < order.index(a)
+
+
+def test_driver_order_rows_only_after_hashed_at_a_tie(tmp_path):
+    order = _order(tmp_path, {5: _green(REGISTRY)}, {})
+    assert order == _HASHED + _ROWS_ONLY
+
+
+def test_driver_order_keeps_names_missing_from_plans(tmp_path):
+    plans = {n: {"fp": "a", "since": 0} for n in _HASHED[1:]}
+    plans["no_such_query"] = {"fp": "a", "since": 99}
+    order = _order(tmp_path, {5: _green(REGISTRY)}, plans)
+    assert sorted(order) == sorted(REGISTRY)

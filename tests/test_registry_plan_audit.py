@@ -1,7 +1,7 @@
 """Registry-WIDE physical-plan anti-pattern gates.
 
 tests/test_plans_audit.py asserts the right plan for ~60 named queries;
-these two tests instead sweep the ENTIRE registry so a scale anti-pattern
+these tests instead sweep the ENTIRE registry so a scale anti-pattern
 cannot slip in through any future query:
 
 1. No single-partition global-window chain (``Window <- Sort <- Exchange
@@ -9,13 +9,18 @@ cannot slip in through any future query:
    the queries where the windowed relation is provably bounded (calendar
    spine, lifetable, histogram bins, per-source quota) or an explicitly
    documented dimension-sized aggregate.
-2. No row-at-a-time Python UDFs anywhere in the package source — only
+2. Every name's plan fingerprint matches ``PLANS.json``, so no plan changes
+   without the driver order hearing of it.
+3. No row-at-a-time Python UDFs anywhere in the package source — only
    Arrow-vectorized forms (pandas_udf / mapInPandas / applyInPandas /
    cogroup / UDTF) are allowed on the Python path.
+
+The plan checks read one registry pass (``tests/registry_pass.py``).
 """
 
 from __future__ import annotations
 
+import json
 import pathlib
 import re
 
@@ -45,22 +50,31 @@ _BOUNDED_WINDOW_OK = {
 }
 
 
-def test_no_single_partition_window_anywhere(spark, sf_smoke):
+def test_no_single_partition_window_anywhere(registry_pass):
     """Sweep every registered query's executed plan at sf0.001."""
-    offenders: dict[str, int] = {}
-    for name, spec in sorted(REGISTRY.items()):
-        if name in _BOUNDED_WINDOW_OK:
-            continue
-        df = spec.fn(spark, sf_smoke)
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        hits = _SP_WINDOW.findall(plan)
-        if hits:
-            offenders[name] = len(hits)
+    offenders = {
+        name: len(hits)
+        for name, run in registry_pass.items()
+        if name not in _BOUNDED_WINDOW_OK and (hits := _SP_WINDOW.findall(run.plan))
+    }
     assert not offenders, (
         f"single-partition global windows outside the bounded allowlist: "
         f"{offenders}"
     )
+
+
+def test_plan_fingerprints_match_plans_json(registry_pass):
+    """Every name's plan fingerprint is the one committed in PLANS.json, so
+    a plan change cannot reach the driver unannounced: regenerate with
+    ``python -m tests.registry_pass``, which marks the changed names to lead
+    the next driver round."""
+    from tests.registry_pass import PLANS
+
+    with open(PLANS) as f:
+        committed = {n: p["fp"] for n, p in json.load(f).items()}
+    fps = {name: run.fp(name) for name, run in registry_pass.items()}
+    differ = sorted(n for n in fps.keys() | committed.keys() if fps.get(n) != committed.get(n))
+    assert not differ, f"plans differ from PLANS.json (python -m tests.registry_pass): {differ}"
 
 
 def test_bounded_window_allowlist_is_not_stale():

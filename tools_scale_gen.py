@@ -18,7 +18,7 @@ workload at scale.
 
 Output layout: <out>/<table>.parquet/part-<i>.parquet (a DIRECTORY of
 part files -- the only layout that exists at 100 TB; the repo's loaders
-and streams handle both layouts, see ROTATION.md round-5 sixth regime).
+and streams handle both layouts, see FIXTURES.md "Table layouts").
 
 Usage:
     python tools_scale_gen.py /root/testdata/sf0.1 /root/repo/.scratch/sf1 10
