@@ -440,20 +440,17 @@ def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     three simultaneous groupings expanded in ONE pass over the fact table —
     the MR multi-key-emit job, planned by Catalyst as a single Expand +
     aggregate, not three scans."""
-    import uuid
-
-    view = f"orders_gs_{uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(view)
     return spark.sql(
-        f"""
+        """
         SELECT o_orderstatus, o_orderpriority,
                count(*) AS n,
                round(sum(cast(round(o_totalprice * 100) AS bigint))
                      / double(100), 2) AS total
-        FROM {view}
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority),
                                 (o_orderstatus, o_orderpriority))
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from cbde_mapreduce_spark.plans.money import cents
 from cbde_mapreduce_spark.plans.registry import query
-from cbde_mapreduce_spark.sources import load_table, load_tables
+from cbde_mapreduce_spark.sources import load_table
 
 
 @query(
@@ -153,25 +153,24 @@ def date_format_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_entry_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The spark.sql(...) entry path (SURVEY §3.2): same engine, SQL text in.
 
-    Views are registered per-query with unique names to stay re-entrant
-    under the driver's shared session.
+    The tables go in as DataFrame arguments: Spark registers each under a
+    generated view name, analyses the query and drops the views before
+    ``sql()`` returns, so concurrent calls in one session share no name and
+    leave nothing in its catalog.
     """
-    import uuid
-
-    tag = uuid.uuid4().hex[:8]
-    tables = load_tables(spark, sf_dir)
-    for name in ("nation", "customer", "orders"):
-        tables[name].createOrReplaceTempView(f"sqlq_{name}_{tag}")
     return spark.sql(
-        f"""
+        """
         SELECT n.n_name, count(DISTINCT c.c_custkey) AS n_customers,
                round(sum(cast(round(o.o_totalprice * 100) AS bigint))
                      / double(100), 2) AS total_revenue
-        FROM sqlq_nation_{tag} n
-        JOIN sqlq_customer_{tag} c ON c.c_nationkey = n.n_nationkey
-        JOIN sqlq_orders_{tag} o   ON o.o_custkey = c.c_custkey
+        FROM {nation} n
+        JOIN {customer} c ON c.c_nationkey = n.n_nationkey
+        JOIN {orders} o   ON o.o_custkey = c.c_custkey
         GROUP BY n.n_name
-        """
+        """,
+        nation=load_table(spark, sf_dir, "nation"),
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

@@ -357,19 +357,16 @@ def lateral_top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFr
     topk_window_per_user produces, reached from declarative SQL. DuckDB
     runs the identical LATERAL syntax as the oracle.
     """
-    import uuid
-
-    tag = uuid.uuid4().hex[:8]
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView(f"n_{tag}")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(f"c_{tag}")
     return spark.sql(
-        f"""
+        """
         SELECT n.n_name, x.c_name, x.c_acctbal
-        FROM n_{tag} n JOIN LATERAL (
-            SELECT c_name, c_acctbal FROM c_{tag} c
+        FROM {nation} n JOIN LATERAL (
+            SELECT c_name, c_acctbal FROM {customer} c
             WHERE c.c_nationkey = n.n_nationkey
             ORDER BY c_acctbal DESC, c_name LIMIT 2) x
-        """
+        """,
+        nation=load_table(spark, sf_dir, "nation"),
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 

@@ -276,13 +276,9 @@ def pipe_syntax_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested form (the oracle is classic SQL), so this is a pure
     surface-coverage differential: two syntaxes, one plan, one result.
     """
-    import uuid
-
-    view = f"li_{uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(view)
     return spark.sql(
-        f"""
-        FROM {view}
+        """
+        FROM {lineitem}
         |> WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |> AGGREGATE round(cast(sum(cast(cast(round(l_extendedprice * 100) AS bigint)
                                      * (100 - cast(round(l_discount * 100) AS bigint))
@@ -290,7 +286,8 @@ def pipe_syntax_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                            / double(10000), 2) AS revenue,
                      count(*) AS n
            GROUP BY l_returnflag
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 

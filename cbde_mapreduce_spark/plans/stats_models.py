@@ -956,8 +956,10 @@ def expected_clv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-horizon survival is the step-function value S(m) = survival at
     the largest lifetable duration <= m — an as-of lookup expressed as a
     conditional max_by over the (horizon × lifetable) join of two
-    bounded relations. One customer-key shuffle total; everything after
-    is calendar-bounded.
+    bounded relations. The user count and the spend rate are whole-lifetable
+    window sums, so the customer relation has one consumer: one
+    customer-key shuffle total, nothing cached; everything after is
+    calendar-bounded.
     """
     orders = load_table(spark, sf_dir, "orders")
     mend = orders.agg(F.max(F.to_date("o_orderdate")).alias("mend"))
@@ -979,35 +981,29 @@ def expected_clv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rc",
         )
     )
-    u = u.cache()
-    # exact integer cents and integer month-counts; ONE deterministic
-    # division chain (money.py)
-    rate = u.agg(
-        (
-            F.sum("rc").cast("double")
-            / F.lit(100.0)
-            / F.sum(F.col("dur_m") + 1).cast("double")
-        ).alias("m_rev")
+    lt = u.groupBy("dur_m").agg(
+        F.sum("churned").cast("bigint").alias("d"),
+        F.sum(1 - F.col("churned")).cast("bigint").alias("c"),
+        F.sum("rc").alias("rc"),
+        F.sum(F.col("dur_m") + 1).alias("dm"),
     )
-    total = u.agg(F.count(F.lit(1)).alias("n_users"))
-    lt = (
-        u.groupBy("dur_m")
-        .agg(
-            F.sum("churned").cast("bigint").alias("d"),
-            F.sum(1 - F.col("churned")).cast("bigint").alias("c"),
-        )
-        .crossJoin(F.broadcast(total))
-    )
+    wall = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     wprev = Window.orderBy("dur_m").rowsBetween(Window.unboundedPreceding, -1)
     wcum = Window.orderBy("dur_m")
     ar = lt.select(
         "dur_m",
         "d",
-        "c",
         (
-            F.col("n_users")
+            F.sum(F.col("d") + F.col("c")).over(wall)
             - F.coalesce(F.sum(F.col("d") + F.col("c")).over(wprev), F.lit(0))
         ).alias("at_risk"),
+        # exact integer cents and integer month-counts; ONE deterministic
+        # division chain (money.py)
+        (
+            F.sum("rc").over(wall).cast("double")
+            / F.lit(100.0)
+            / F.sum("dm").over(wall).cast("double")
+        ).alias("m_rev"),
     )
     lnf = F.when(F.col("d") == 0, F.lit(0.0)).otherwise(
         F.log(
@@ -1017,23 +1013,29 @@ def expected_clv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    km = ar.select("dur_m", F.exp(F.sum(lnf).over(wcum)).alias("surv"))
+    km = ar.select("dur_m", F.exp(F.sum(lnf).over(wcum)).alias("surv"), "m_rev")
     months = (
         orders.sparkSession.range(1, _CLV_HORIZON_M + 1)
         .select(F.col("id").cast("bigint").alias("m"))
     )
     hz = (
-        # LEFT join: a horizon month below the minimum lifetable duration
-        # must surface with NULL survival (as the oracle's correlated
-        # subquery does), not be dropped from the curve.
-        months.join(F.broadcast(km), km.dur_m <= months.m, "left")
+        # every (month, lifetable row) pair, LEFT so that an empty lifetable
+        # still yields the 24 months; a month below the minimum lifetable
+        # duration surfaces with NULL survival, as the oracle's correlated
+        # subquery does, and with the rate all the same
+        months.join(F.broadcast(km), F.lit(True), "left")
         .groupBy("m")
-        .agg(F.expr("max_by(surv, dur_m)").alias("s_m"))
+        .agg(
+            F.max_by(
+                "surv", F.when(F.col("dur_m") <= F.col("m"), F.col("dur_m"))
+            ).alias("s_m"),
+            F.max("m_rev").alias("m_rev"),
+        )
     )
     acc = hz.select(
-        "m", "s_m", F.sum("s_m").over(Window.orderBy("m")).alias("cum_s")
+        "m", "s_m", "m_rev", F.sum("s_m").over(Window.orderBy("m")).alias("cum_s")
     )
-    return acc.crossJoin(F.broadcast(rate)).select(
+    return acc.select(
         F.col("m").alias("month"),
         F.round("s_m", 6).alias("survival"),
         F.round("m_rev", 4).alias("monthly_rev"),

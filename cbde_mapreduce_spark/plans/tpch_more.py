@@ -99,18 +99,14 @@ def q4_priority_late_ship(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q2_cheapest_part_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: correlated scalar subquery (min per group), expressed
     through spark.sql so Catalyst's subquery decorrelation runs."""
-    import uuid
-
-    view = f"tpch_part_{uuid.uuid4().hex[:8]}"
-    part = load_table(spark, sf_dir, "part")
-    part.createOrReplaceTempView(view)
     return spark.sql(
-        f"""
-        SELECT p.p_partkey, p.p_name, p.p_type, p.p_retailprice
-        FROM {view} p
-        WHERE p.p_retailprice = (
-            SELECT min(p2.p_retailprice) FROM {view} p2 WHERE p2.p_type = p.p_type)
         """
+        SELECT p.p_partkey, p.p_name, p.p_type, p.p_retailprice
+        FROM {part} p
+        WHERE p.p_retailprice = (
+            SELECT min(p2.p_retailprice) FROM {part} p2 WHERE p2.p_type = p.p_type)
+        """,
+        part=load_table(spark, sf_dir, "part"),
     )
 
 

@@ -429,19 +429,16 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: correlated average-quantity subquery per part,
     expressed through spark.sql so Catalyst decorrelates it into an
     aggregate + join (no per-row re-scan)."""
-    import uuid
-
-    view = f"tpch_li_{uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(view)
     return spark.sql(
-        f"""
+        """
         SELECT round(sum(cast(round(l.l_extendedprice * 100) AS bigint))
                      / double(100) / double(7), 2) AS avg_yearly
-        FROM {view} l
+        FROM {lineitem} l
         WHERE l.l_quantity < (
-            SELECT 0.5 * avg(l2.l_quantity) FROM {view} l2
+            SELECT 0.5 * avg(l2.l_quantity) FROM {lineitem} l2
             WHERE l2.l_partkey = l.l_partkey)
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -469,29 +466,26 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: the sole at-fault supplier per multi-supplier order —
     EXISTS + NOT EXISTS self-joins on the fact table (returnflag stands in
     for the absent receipt/commit lag). spark.sql for subquery planning."""
-    import uuid
-
-    tag = uuid.uuid4().hex[:8]
-    load_table(spark, sf_dir, "supplier").createOrReplaceTempView(f"s_{tag}")
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(f"l_{tag}")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(f"o_{tag}")
     return spark.sql(
-        f"""
+        """
         SELECT s.s_name, count(*) AS numwait
-        FROM s_{tag} s
-        JOIN l_{tag} l1 ON s.s_suppkey = l1.l_suppkey
-        JOIN o_{tag} o  ON o.o_orderkey = l1.l_orderkey
+        FROM {supplier} s
+        JOIN {lineitem} l1 ON s.s_suppkey = l1.l_suppkey
+        JOIN {orders} o    ON o.o_orderkey = l1.l_orderkey
         WHERE o.o_orderstatus = 'F'
           AND l1.l_returnflag = 'R'
-          AND EXISTS (SELECT 1 FROM l_{tag} l2
+          AND EXISTS (SELECT 1 FROM {lineitem} l2
                       WHERE l2.l_orderkey = l1.l_orderkey
                         AND l2.l_suppkey <> l1.l_suppkey)
-          AND NOT EXISTS (SELECT 1 FROM l_{tag} l3
+          AND NOT EXISTS (SELECT 1 FROM {lineitem} l3
                           WHERE l3.l_orderkey = l1.l_orderkey
                             AND l3.l_suppkey <> l1.l_suppkey
                             AND l3.l_returnflag = 'R')
         GROUP BY s.s_name
-        """
+        """,
+        supplier=load_table(spark, sf_dir, "supplier"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

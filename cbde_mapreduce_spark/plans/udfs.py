@@ -194,17 +194,13 @@ def python_udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, w in enumerate(text.split(" ")):
                 yield (w, i + 1)
 
-    import uuid
-
-    tag = uuid.uuid4().hex[:8]
-    spark.udtf.register(f"cbde_tokenize_{tag}", Tokenize)
-    docs = load_table(spark, sf_dir, "documents")
-    docs.filter(F.col("doc_id") < 20).createOrReplaceTempView(f"udtf_docs_{tag}")
+    spark.udtf.register("cbde_tokenize", Tokenize)
     return spark.sql(
-        f"""
-        SELECT d.doc_id, t.token, t.pos
-        FROM udtf_docs_{tag} d, LATERAL cbde_tokenize_{tag}(d.text) t
         """
+        SELECT d.doc_id, t.token, t.pos
+        FROM {docs} d, LATERAL cbde_tokenize(d.text) t
+        """,
+        docs=load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20),
     )
 
 
@@ -227,8 +223,6 @@ def udtf_table_arg_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     like a groupBy. The oracle is the plain GROUP BY twin — the escape
     hatch must agree with the declarative form.
     """
-    import uuid
-
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="lang string, n_docs bigint, total_chars bigint")
@@ -251,11 +245,10 @@ def udtf_table_arg_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             if self._seen:
                 yield (self._lang, self._n, self._chars)
 
-    tag = uuid.uuid4().hex[:8]
-    spark.udtf.register(f"lang_stats_{tag}", LangStats)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(f"docs_{tag}")
+    spark.udtf.register("lang_stats", LangStats)
     return spark.sql(
-        f"SELECT * FROM lang_stats_{tag}(TABLE(docs_{tag}) PARTITION BY lang)"
+        "SELECT * FROM lang_stats(TABLE({docs}) PARTITION BY lang)",
+        docs=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -594,8 +587,6 @@ def udtf_analyze_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans/text.py). Oracle: DuckDB list slicing over the same positions,
     1-based, windows that fit entirely inside the token list.
     """
-    import uuid
-
     from pyspark.sql.functions import udtf
     from pyspark.sql.types import IntegerType, LongType, StringType, StructType
     from pyspark.sql.udtf import AnalyzeArgument, AnalyzeResult
@@ -620,16 +611,12 @@ def udtf_analyze_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(len(toks) - n + 1):
                 yield (" ".join(toks[i : i + n]), i + 1)
 
-    tag = uuid.uuid4().hex[:8]
-    spark.udtf.register(f"cbde_ngrams_{tag}", udtf(NGrams))
-    docs = load_table(spark, sf_dir, "documents")
-    docs.filter(F.col("doc_id") < 20).createOrReplaceTempView(
-        f"udtf_ng_docs_{tag}"
-    )
+    spark.udtf.register("cbde_ngrams", udtf(NGrams))
     return spark.sql(
-        f"""
-        SELECT d.doc_id, g.gram_{_NGRAM_N}, g.pos
-        FROM udtf_ng_docs_{tag} d,
-             LATERAL cbde_ngrams_{tag}(d.text, {_NGRAM_N}) g
         """
+        SELECT d.doc_id, g.gram_{n}, g.pos
+        FROM {docs} d, LATERAL cbde_ngrams(d.text, {n}) g
+        """,
+        docs=load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20),
+        n=_NGRAM_N,
     )

@@ -449,12 +449,8 @@ def gapfill_weekly_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. The scaffold is tiny (one row per week) and the fact side is
     joined ONCE after generation, never re-scanned per level.
     """
-    import uuid
-
-    view = f"orders_{uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(view)
     return spark.sql(
-        f"""
+        """
         WITH RECURSIVE weeks(ws) MAX RECURSION LEVEL 200 AS (
             SELECT TIMESTAMP '1996-01-01 00:00:00'
             UNION ALL
@@ -462,12 +458,13 @@ def gapfill_weekly_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             WHERE ws + INTERVAL 7 DAY < TIMESTAMP '1998-01-06 00:00:00'
         )
         SELECT w.ws AS week_start, count(o.o_orderkey) AS n_orders
-        FROM weeks w LEFT JOIN {view} o
+        FROM weeks w LEFT JOIN {orders} o
           ON date_trunc('week', o.o_orderdate) = w.ws
          AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
          AND o.o_orderdate <  TIMESTAMP '1998-01-05 00:00:00'
         GROUP BY 1
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

@@ -133,7 +133,8 @@ def run_to_memory(stream: DataFrame, name: str, output_mode: str) -> DataFrame:
 
     The query's checkpoint is a fresh temp dir, removed once the query has
     terminated: the memory sink holds the rows, and a bounded run has no
-    later batch to resume from."""
+    later batch to resume from. The sink's temp view is dropped once the
+    returned table has resolved it; the plan keeps the sink itself."""
     sink = f"{name}_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
     try:
@@ -148,7 +149,9 @@ def run_to_memory(stream: DataFrame, name: str, output_mode: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
-    return stream.sparkSession.table(sink)
+    table = stream.sparkSession.table(sink)
+    stream.sparkSession.catalog.dropTempView(sink)
+    return table
 
 
 def run_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:

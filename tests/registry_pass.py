@@ -7,6 +7,8 @@ name it releases the cached tables and every persistent RDD
 listener bus. It keeps the final executed-plan string and the normalized
 plan of every SQL execution the name ran: the collect and each job run while
 the plan was built (loop rounds, broadcast gates, BPE's vocabulary collect).
+It also keeps what the name left in the session: the temp views and temp
+functions it added and whether a relation stayed cached.
 The default tier runs the pass once at sf0.001, through the session-scoped
 ``registry_pass`` fixture in ``conftest.py``.
 
@@ -59,7 +61,8 @@ _VOLATILE = [
     (re.compile(r"(splits=Some\(|numPartitions = )\d+"), r"\1"),
     (re.compile(r", Statistics\([^)]*\)|isFinalPlan=\w+|\bfile:[^\s,\]]*|@[0-9a-f]+\b"), ""),
     (re.compile(r"[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}"), "uuid"),
-    (re.compile(r"_[0-9a-f]{8,12}\b"), "_"),  # uuid-suffixed view and function names
+    # uuid-suffixed view names: run_to_memory's sinks, spark.sql's ``_pyspark_`` views
+    (re.compile(r"_[0-9a-f]{8,32}\b"), "_"),
 ]
 _FINAL = re.compile(r"\+- == (Final|Current) Plan ==")
 _TREE_ID = re.compile(r" \((\d+)\)")
@@ -101,12 +104,26 @@ def normalize(description: str) -> str:
 class Run(NamedTuple):
     plan: str  # the final executed plan, as ``executedPlan().toString()``
     execs: list[str]  # normalized plans of every SQL execution, in order
+    views: set[str]  # temp views the name added to the session
+    functions: set[str]  # temp functions the name added to the session
+    cached: bool  # the cache manager holds a relation after the name ran
 
     def fp(self, name: str) -> str:
         h = hashlib.sha256((REGISTRY[name].oracle or "").encode())
         for plan in self.execs:
             h.update(b"\0" + plan.encode())
         return h.hexdigest()[:16]
+
+
+def temp_names(spark) -> tuple[set[str], set[str]]:
+    """The session's temp views and temp functions, read from the JVM catalog
+    (``spark.catalog.listTables`` would post SQL executions of its own)."""
+    cat = spark._jsparkSession.sessionState().catalog()
+    views, fns = cat.listLocalTempViews("*"), cat.listTemporaryFunctions()
+    return (
+        {views.apply(i).table() for i in range(views.size())},
+        {fns.apply(i).funcName() for i in range(fns.size())},
+    )
 
 
 def run_pass(spark, sf_dir: str) -> dict[str, Run]:
@@ -116,9 +133,11 @@ def run_pass(spark, sf_dir: str) -> dict[str, Run]:
     bus.waitUntilEmpty()
     n = store.executionsCount()
     seen = store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+    cache = spark._jsparkSession.sharedState().cacheManager()
     runs = {}
     for name in sorted(REGISTRY):
         release(spark)
+        views, fns = temp_names(spark)
         df = REGISTRY[name].fn(spark, sf_dir)
         df.collect()
         bus.waitUntilEmpty()
@@ -126,7 +145,9 @@ def run_pass(spark, sf_dir: str) -> dict[str, Run]:
         while not (e := store.execution(seen + 1)).isEmpty():
             seen += 1
             execs.append(normalize(e.get().physicalPlanDescription()))
-        runs[name] = Run(df._jdf.queryExecution().executedPlan().toString(), execs)
+        views_after, fns_after = temp_names(spark)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        runs[name] = Run(plan, execs, views_after - views, fns_after - fns, not cache.isEmpty())
     release(spark)
     return runs
 

@@ -26,6 +26,12 @@ QUERIES = [
     "dedup_exact_docs",
     "histogram_event_types",
     "rank_customers_in_nation",
+    # plans that touch the session catalog while they are built: SQL text
+    # with DataFrame arguments, a fixed-name UDTF, a memory-sink stream
+    "q21_waiting_supplier",
+    "sql_entry_revenue_by_nation",
+    "udtf_analyze_ngrams",
+    "streaming_tumbling_counts",
 ]
 
 

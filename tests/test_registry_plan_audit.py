@@ -11,7 +11,9 @@ cannot slip in through any future query:
    documented dimension-sized aggregate.
 2. Every name's plan fingerprint matches ``PLANS.json``, so no plan changes
    without the driver order hearing of it.
-3. No row-at-a-time Python UDFs anywhere in the package source — only
+3. No name leaves a temp view, a temp function other than the fixed UDTF
+   names, or (outside a named set) a cached relation in the session.
+4. No row-at-a-time Python UDFs anywhere in the package source — only
    Arrow-vectorized forms (pandas_udf / mapInPandas / applyInPandas /
    cogroup / UDTF) are allowed on the Python path.
 
@@ -75,6 +77,32 @@ def test_plan_fingerprints_match_plans_json(registry_pass):
     fps = {name: run.fp(name) for name, run in registry_pass.items()}
     differ = sorted(n for n in fps.keys() | committed.keys() if fps.get(n) != committed.get(n))
     assert not differ, f"plans differ from PLANS.json (python -m tests.registry_pass): {differ}"
+
+
+#: The Python UDTFs the registry registers, each under one fixed name.
+_UDTF_NAMES = {"cbde_tokenize", "lang_stats", "cbde_ngrams"}
+
+#: Names whose plan keeps its edge set cached (ROADMAP Direction 6 empties it).
+_LEAVES_CACHE = {"pagerank_trade_graph", "hits_authority_suppliers"}
+
+
+def test_registry_plans_leave_no_session_state(spark, registry_pass):
+    """A plan releases the catalog state it makes: SQL-text plans hand their
+    tables to ``spark.sql`` as DataFrame arguments (Spark drops those views
+    before ``sql()`` returns), memory-sink views are dropped once the sink is
+    read, and re-registering a UDTF under its fixed name replaces it."""
+    from tests.registry_pass import temp_names
+
+    left = {
+        name: sorted(run.views | (run.functions - _UDTF_NAMES))
+        for name, run in registry_pass.items()
+        if run.views or run.functions - _UDTF_NAMES
+    }
+    assert not left, f"temp views/functions left in the session: {left}"
+    functions = temp_names(spark)[1]
+    assert functions == _UDTF_NAMES, f"temp functions after the pass: {sorted(functions)}"
+    cached = {name for name, run in registry_pass.items() if run.cached}
+    assert cached == _LEAVES_CACHE, f"cached relations left by: {sorted(cached)}"
 
 
 def test_bounded_window_allowlist_is_not_stale():
