@@ -10,9 +10,10 @@ Prints ONE JSON line:
 Method: one ``get_spark()`` session with the engine's own defaults, as wide
 as the cores the process may run on (``SPARK_GRAFT_CPUS`` overrides the
 width). Every run goes through ``time_fresh``: release the cached tables and
-every persistent RDD, build the plan from the registry off the clock, then
-time ``toPandas()`` over the whole plan, so each run executes every shuffle
-stage and reuses nothing an earlier run left. One
+every persistent RDD, then time building the plan from the registry plus
+``toPandas()`` over the whole plan (an iterative query runs its rounds while
+its plan is built), so each run executes every shuffle stage and reuses
+nothing an earlier run left. One
 unmeasured pass over all names warms the JVM, codegen and the Python workers;
 ``RUNS`` measured passes follow. A name's time is its median over the
 measured passes of wall time less the hypervisor's steal (``/proc/stat``,
@@ -77,18 +78,20 @@ def release(spark) -> None:
 
 
 def time_fresh(spark, sf_dir: str, name: str) -> dict[str, float]:
-    """Build registry query ``name`` fresh and time its full execution.
+    """Build registry query ``name`` fresh and time its build and full
+    execution together.
 
-    Returns ``build_s`` (off the clock), ``run_s`` (wall less steal),
-    ``cpu_s`` (process tree) and ``stolen_s``. The session holds no cached
-    relation and no persistent RDD when the execution starts or after it.
+    Returns ``run_s`` (build plus execution, wall less steal), ``build_s``
+    (the build's share of the wall), ``cpu_s`` (process tree) and
+    ``stolen_s``. A loop's rounds run while its plan is built, so the build
+    is on the clock. The session holds no cached relation and no persistent
+    RDD when the build starts or after the execution.
     """
     release(spark)
     try:
-        t0 = time.perf_counter()
+        s0, c0, t0 = stolen_s(), tree_cpu_s(), time.perf_counter()
         df = REGISTRY[name].fn(spark, sf_dir)
         build = time.perf_counter() - t0
-        s0, c0, t0 = stolen_s(), tree_cpu_s(), time.perf_counter()
         df.toPandas()
         wall = time.perf_counter() - t0
         cpu, stolen = tree_cpu_s() - c0, stolen_s() - s0

@@ -95,6 +95,60 @@ _PR_ORACLE = f"""
 """
 
 
+def _rank_rounds(spark: SparkSession, sf_dir: str, source: int | None) -> DataFrame:
+    """``N_ITERS`` rounds of PageRank (d = ``DAMPING``) on the symmetrized
+    trade graph; returns the final ``(v, r)`` rank table, checkpointed.
+
+    From a ``source`` vertex, rank starts there and teleports back to it
+    (personalized); with no source, every vertex starts at 1/n and teleports
+    uniformly. Every vertex has out-degree >= 1, so the degree table holds
+    all n vertices.
+
+    Loop state (operators/loop.py): the edge set (data-sized) and the degree
+    table (vertex-sized) are invariants laid out on the round join key a, and
+    intermediate rank tables keep their layout, so a past-the-gate round's
+    rank⋈deg and e⋈rd joins are exchange-free and the only per-round exchange
+    is the contribution groupBy (OPTIMIZATION_r13 §1). The rank table
+    broadcasts into both joins while its measured count is under the gate
+    (operators/gates.py), else both joins shuffle on the vertex key."""
+    with RoundState(layout_rounds=N_ITERS) as rs:
+        e = rs.invariant(
+            _encoded_sym_edges(spark, sf_dir)
+            .repartition("a")
+            .sortWithinPartitions("a", "b"),
+            DATA_SIZED,
+        )
+        deg = rs.invariant(
+            e.groupBy("a").agg(F.count(F.lit(1)).cast("double").alias("d")),
+            KEY_SIZED,
+        )
+        n = deg.count()  # the |E|-row aggregation runs once, before round 1
+        if source is None:
+            ranks = deg.select(F.col("a").alias("v"), F.lit(1.0 / max(n, 1)).alias("r"))
+            teleport, n_ranks = F.lit((1.0 - DAMPING) / max(n, 1)), n
+        else:
+            ranks = spark.range(1).select(
+                F.lit(source).cast("long").alias("v"), F.lit(1.0).alias("r")
+            )
+            teleport = F.when(F.col("v") == source, F.lit(1.0 - DAMPING)).otherwise(
+                F.lit(0.0)
+            )
+            n_ranks = 1
+        for _ in range(N_ITERS):
+            ra = maybe_broadcast(ranks.withColumnRenamed("v", "a"), n_ranks)
+            rd = ra.join(deg, "a").select("a", (F.col("r") / F.col("d")).alias("c0"))
+            contrib = e.join(maybe_broadcast(rd, n_ranks), "a").select(
+                F.col("b").alias("v"), F.col("c0").alias("c")
+            )
+            ranks = rs.advance(
+                contrib.groupBy("v").agg(
+                    (teleport + F.lit(DAMPING) * F.sum("c")).alias("r")
+                )
+            )
+            n_ranks = rs.rows
+    return ranks
+
+
 @query("pagerank_trade_graph", oracle=_PR_ORACLE, category="graph")
 def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-round PageRank (d=0.85) on the symmetrized customer↔supplier trade
@@ -103,50 +157,9 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ranks are rounded BEFORE the final sort so cross-engine float noise
     (~1e-15 from summation order) cannot reorder near-ties at the cutoff.
     """
-    e = _encoded_sym_edges(spark, sf_dir)
-    # edges drive every round: materialize once, reuse three times — laid
-    # out partitioned+sorted on the round join key, so deg's groupBy, the
-    # vertex distinct and every round's rank join read the cache with no
-    # exchange and no per-round sort (the one shuffle left per round is the
-    # irreducible contribution groupBy(v))
-    e = e.repartition("a").sortWithinPartitions("a", "b").cache()
-    verts = e.select(F.col("a").alias("v")).distinct()
-    # vertex count as a broadcast one-row scalar, NOT a driver-side
-    # .count(): the eager count executed the whole edge build at
-    # plan-construction time (~5 s of the bench's planning_sec at sf0.1,
-    # and a blocking driver round-trip before the plan even exists at
-    # cluster scale); as a scalar it rides the cached edge set inside the
-    # executed plan. greatest(n, 1) keeps the constants finite on an
-    # empty graph (every frame is empty anyway). Same IEEE doubles as the
-    # old driver-side literals: both paths divide the identical operands.
-    nn = F.broadcast(
-        verts.agg(F.greatest(F.count(F.lit(1)), F.lit(1)).alias("nv"))
-    )
-    deg = e.groupBy("a").agg(F.count(F.lit(1)).cast("double").alias("d"))
-
-    ranks = verts.crossJoin(nn).select(
-        "v", (F.lit(1.0) / F.col("nv")).alias("r")
-    )
-    for _ in range(N_ITERS):
-        contrib = (
-            e.join(ranks.withColumnRenamed("v", "a"), "a")
-            .join(deg, "a")
-            .select(F.col("b").alias("v"), (F.col("r") / F.col("d")).alias("c"))
-        )
-        ranks = (
-            contrib.groupBy("v")
-            .agg(F.sum("c").alias("sc"))
-            .crossJoin(nn)
-            .select(
-                "v",
-                (
-                    F.lit(1.0 - DAMPING) / F.col("nv")
-                    + F.lit(DAMPING) * F.col("sc")
-                ).alias("r"),
-            )
-        )
     return (
-        ranks.select("v", F.round("r", 6).alias("pr"))
+        _rank_rounds(spark, sf_dir, None)
+        .select("v", F.round("r", 6).alias("pr"))
         .orderBy(F.desc("pr"), F.asc("v"))
         .limit(TOP_N)
     )
@@ -339,55 +352,14 @@ _PPR_ORACLE = f"""
 def ppr_trade_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank from one customer vertex — the graph-proximity
     recommender primitive ("suppliers/customers most relevant to THIS
-    entity"). Identical round structure to pagerank_trade_graph with one
-    change: teleport mass returns to the SOURCE, not uniformly — so rank
-    concentrates in the source's neighborhood and far vertices stay 0
-    (pruned before the rounded top-20). Same per-round cost (one edge join
-    + combinable sum); the rank table is only the reached neighborhood,
-    SMALLER than global PageRank's — personalization is cheaper, not
-    dearer, at scale.
-
-    Loop state (operators/loop.py): the edge set (data-sized) and the
-    degree table (vertex-sized) are invariants laid out on the round join
-    key a; intermediate rank tables keep their layout, so a past-the-gate
-    round's rank⋈deg and e⋈rd joins are exchange-free and the only
-    per-round exchange is the contribution groupBy (OPTIMIZATION_r13 §1).
-    The rank table broadcasts into both joins while its measured count is
-    under the gate (operators/gates.py), else both joins shuffle on the
-    vertex key — the per-round cost global PageRank pays."""
-    with RoundState(layout_rounds=N_ITERS) as rs:
-        e = rs.invariant(
-            _encoded_sym_edges(spark, sf_dir)
-            .repartition("a")
-            .sortWithinPartitions("a", "b"),
-            DATA_SIZED,
-        )
-        deg = rs.invariant(
-            e.groupBy("a").agg(F.count(F.lit(1)).cast("double").alias("d")),
-            KEY_SIZED,
-        )
-        deg.count()  # the |E|-row aggregation runs once, before round 1
-        ranks = spark.range(1).select(
-            F.lit(_PPR_SOURCE).cast("long").alias("v"), F.lit(1.0).alias("r")
-        )
-        teleport = F.when(F.col("v") == _PPR_SOURCE, F.lit(1.0 - DAMPING)).otherwise(
-            F.lit(0.0)
-        )
-        n_ranks = 1
-        for _ in range(N_ITERS):
-            ra = maybe_broadcast(ranks.withColumnRenamed("v", "a"), n_ranks)
-            rd = ra.join(deg, "a").select("a", (F.col("r") / F.col("d")).alias("c0"))
-            contrib = e.join(maybe_broadcast(rd, n_ranks), "a").select(
-                F.col("b").alias("v"), F.col("c0").alias("c")
-            )
-            ranks = rs.advance(
-                contrib.groupBy("v").agg(
-                    (teleport + F.lit(DAMPING) * F.sum("c")).alias("r")
-                )
-            )
-            n_ranks = rs.rows
+    entity"). pagerank_trade_graph's rounds with one change: teleport mass
+    returns to the SOURCE, not uniformly — so rank concentrates in the
+    source's neighborhood and far vertices stay 0 (pruned before the rounded
+    top-20). The rank table is only the reached neighborhood, so it stays
+    under the broadcast gate longer than global PageRank's."""
     return (
-        ranks.select("v", F.round("r", 6).alias("ppr"))
+        _rank_rounds(spark, sf_dir, _PPR_SOURCE)
+        .select("v", F.round("r", 6).alias("ppr"))
         .filter(F.col("ppr") > 0)
         .orderBy(F.desc("ppr"), F.asc("v"))
         .limit(TOP_N)
@@ -597,47 +569,40 @@ def hits_authority_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-15 suppliers by the round-2 authority score.
 
     Completes the link-analysis trio beside pagerank_trade_graph (global)
-    and personalized_pagerank (seeded). Each half-step is one shuffle of the
-    incidence list joined against the previous score vector; the L1
-    normalizers are single-row aggregates broadcast back — the same
+    and ppr_trade_recommendations (seeded). Each half-step is one shuffle of
+    the incidence list joined against the previous score vector — the same
     scale shape as a PageRank round, alternating over the two vertex
-    classes. Scores round to 6 dp before the final sort so cross-engine
-    summation-order noise cannot reorder the cutoff.
+    classes. Loop state (operators/loop.py): the edge set is a data-sized
+    invariant and the one authority step is checkpointed. Scores round to
+    6 dp before the final sort so cross-engine summation-order noise cannot
+    reorder the cutoff.
     """
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # Cache laid out on the HUB key c, with the incidence dedup riding the
-    # layout exchange: hashpartitioning(c) satisfies the (c, s) clustering
-    # requirement of dropDuplicates, so |E| crosses the network exactly ONCE
-    # to both dedup and lay out the cache (r13 probe; the r12 s-layout paid
-    # distinct + repartition = two |E| moves and its target — a1's groupBy
-    # and the e ⋈ a1 join — was already cheap because a1 is a broadcast-
-    # sized supplier dimension at every scale). On the c-layout, h1's
-    # groupBy("c") is exchange-free (partial+final aggregate adjacent over
-    # the cache — verified in plans/r13/hits_authority_suppliers_after.txt)
-    # and the remaining exchanges are the two vertex-sized, map-side-
-    # combined score shuffles (a1's and a2's groupBy) — the alternation
-    # itself. No sortWithinPartitions: every join here is broadcast-hash,
-    # so an in-partition order would cost a build sort and buy nothing.
-    e = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .repartition("c")
-        .dropDuplicates(["c", "s"])
-        .cache()
-    )
-    # The L1 normalizers CANCEL through the hub/authority alternation, so
-    # both half-steps ride EXACT integers (money.py round-11: the old
-    # per-row ratio sums were scheduler-order double accumulation):
-    # authority^2(s) proportional to sum over s's customers of their
-    # integer hub mass, normalized ONCE in the final deterministic
-    # division. decimal(38,0) on the last sum: hub masses are
-    # incidence-sized, their per-supplier sums square that.
-    a1 = e.groupBy("s").agg(F.count(F.lit(1)).cast("bigint").alias("a"))
-    h1 = e.join(a1, "s").groupBy("c").agg(F.sum("a").alias("h"))
-    a2 = e.join(h1, "c").groupBy("s").agg(
-        F.sum(F.col("h").cast("decimal(38,0)")).alias("a")
-    )
+    with RoundState() as rs:
+        # laid out on the hub key c: hashpartitioning(c) satisfies
+        # dropDuplicates' (c, s) clustering, so the dedup rides the layout
+        # exchange (|E| moves once) and h1's groupBy("c") is exchange-free;
+        # every join is broadcast-hash, so no sortWithinPartitions
+        # (tests/test_optimization_r13.py)
+        e = rs.invariant(
+            li.join(orders, li.l_orderkey == orders.o_orderkey)
+            .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
+            .repartition("c")
+            .dropDuplicates(["c", "s"]),
+            DATA_SIZED,
+        )
+        # The L1 normalizers cancel through the hub/authority alternation,
+        # so both half-steps sum exact integers and normalize once, in the
+        # final division; decimal(38,0) on the last sum: hub masses are
+        # incidence-sized, their per-supplier sums square that.
+        a1 = e.groupBy("s").agg(F.count(F.lit(1)).cast("bigint").alias("a"))
+        h1 = e.join(a1, "s").groupBy("c").agg(F.sum("a").alias("h"))
+        a2 = rs.advance(
+            e.join(h1, "c").groupBy("s").agg(
+                F.sum(F.col("h").cast("decimal(38,0)")).alias("a")
+            )
+        )
     a2t = a2.agg(F.sum("a").alias("at"))
     return (
         a2.crossJoin(F.broadcast(a2t))

@@ -77,12 +77,14 @@ def test_connected_components_leave_one_round_of_state(spark):
 def test_iterative_queries_leave_bounded_state(spark, sf_smoke):
     """Registry-level sweep of every iterative query: after
     collect(), at most the documented live state remains — the final
-    round's table (BFS/PPR/SSSP/CC), none for BPE — never one block-set
-    per round per table."""
+    round's table (BFS/PageRank/PPR/SSSP/HITS/CC), none for BPE — never one
+    block-set per round per table."""
     budgets = {
         "bfs_hops_trade_graph": 1,  # final visited; edge set released
+        "pagerank_trade_graph": 1,  # final ranks; edges and deg released
         "ppr_trade_recommendations": 1,  # final ranks; edges and deg released
         "sssp_trade_graph": 1,  # final dist; edge set released
+        "hits_authority_suppliers": 1,  # final authorities; edge set released
         "neardup_components": 1,  # final CC labels
         "neardup_components_star": 1,  # final star forest
         "bpe_merges_vocab": 0,  # driver-side rounds; merges are a local relation
@@ -94,24 +96,32 @@ def test_iterative_queries_leave_bounded_state(spark, sf_smoke):
         assert leaked <= budget, f"{name}: {leaked} persistent RDDs > {budget}"
 
 
+#: The round a loop raises in: round 2, or a one-round loop's only round.
+_RAISING_ROUND = {"hits_authority_suppliers": 1}
+
+
 @pytest.mark.parametrize(
     "name",
     [
         "bfs_hops_trade_graph",
+        "pagerank_trade_graph",
         "ppr_trade_recommendations",
         "sssp_trade_graph",
+        "hits_authority_suppliers",
         "connected_components",
         "connected_components_star",
     ],
 )
 def test_loop_raising_in_round_2_leaves_no_blocks(spark, sf_smoke, monkeypatch, name):
-    """A loop that raises in round 2 — after its invariants are filled and
-    round 1's state (if any) is held — must release every block it made."""
+    """A loop that raises in round 2 (a one-round loop in its only round:
+    ``_RAISING_ROUND``) — after its invariants are filled and the previous
+    round's state (if any) is held — must release every block it made."""
     advance = RoundState.advance
+    raising_round = _RAISING_ROUND.get(name, 2)
 
     def flaky(self, df):
         out = advance(self, df)
-        if self.round == 2:
+        if self.round == raising_round:
             raise _Injected
         return out
 

@@ -15,14 +15,13 @@
    here: a persisted round-state joined against the pre-laid edge cache
    plans with ZERO exchanges on either side (the only shuffle of a full
    round is the propagation groupBy itself).
-2. hits_authority_suppliers' edge cache moved from the r12 s-layout (a
-   distinct + a repartition = two |E| moves; target already broadcast-sized)
-   to the c-layout with the incidence dedup RIDING the layout exchange:
-   hashpartitioning(c) satisfies the (c, s) clustering requirement of
-   dropDuplicates, so |E| crosses the network exactly once AND h1's
-   groupBy("c") is exchange-free over the cache. Pinned here: the build
-   plan has exactly one shuffle, and groupBy("c") over the cache plans
-   without an Exchange.
+2. hits_authority_suppliers' edge set is laid out on the hub key c with
+   the incidence dedup RIDING the layout exchange: hashpartitioning(c)
+   satisfies the (c, s) clustering requirement of dropDuplicates, so |E|
+   crosses the network exactly once AND h1's groupBy("c") is exchange-free
+   over the persisted set (a ``RoundState`` invariant). Pinned here: the
+   build plan has exactly one shuffle, and groupBy("c") over the persisted
+   set plans without an Exchange.
 """
 
 from __future__ import annotations
@@ -113,7 +112,8 @@ def test_per_round_state_persist_keeps_layout(spark):
 def test_hits_c_layout_single_build_shuffle(spark):
     """hashpartitioning(c) must keep satisfying dropDuplicates([c, s])'s
     clustering requirement (the dedup rides the layout exchange), and the
-    h1-side groupBy("c") over the cache must stay exchange-free."""
+    h1-side groupBy("c") over the persisted edge set must stay
+    exchange-free."""
     raw = spark.range(20_000).select(
         (F.col("id") % 700).alias("c"), (F.col("id") % 97).alias("s")
     )
@@ -128,9 +128,9 @@ def test_hits_c_layout_single_build_shuffle(spark):
     n_exchange = sum(n.startswith("ShuffleExchange") for n in names)
     assert n_exchange == 1, (n_exchange, names)
 
-    e = build.cache()
-    e.count()
-    try:
+    with RoundState() as rs:  # the storage hits_authority_suppliers holds it in
+        e = rs.invariant(build, DATA_SIZED)
+        e.count()
         h1 = e.groupBy("c").agg(F.count(F.lit(1)).alias("h"))
         h1.write.format("noop").mode("overwrite").save()
         jp = h1._jdf.queryExecution().executedPlan()
@@ -139,8 +139,6 @@ def test_hits_c_layout_single_build_shuffle(spark):
         names = _node_names(jp)
         assert not any(n.startswith("ShuffleExchange") for n in names), names
         assert any("InMemoryTableScan" in n for n in names), names
-    finally:
-        e.unpersist()
 
 
 def test_cc_still_converges_and_releases(spark):

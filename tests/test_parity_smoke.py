@@ -17,8 +17,10 @@ from tests.parity import assert_parity
 
 SMOKE = [
     ("bfs_hops_trade_graph", "sf_smoke"),
+    ("pagerank_trade_graph", "sf_smoke"),
     ("ppr_trade_recommendations", "sf_smoke"),
     ("sssp_trade_graph", "sf_smoke"),
+    ("hits_authority_suppliers", "sf_smoke"),
     ("neardup_components", "sf_smoke"),
     ("neardup_components_star", "sf_smoke"),
     ("bpe_merges_vocab", "sf_smoke"),

@@ -82,15 +82,14 @@ def test_plan_fingerprints_match_plans_json(registry_pass):
 #: The Python UDTFs the registry registers, each under one fixed name.
 _UDTF_NAMES = {"cbde_tokenize", "lang_stats", "cbde_ngrams"}
 
-#: Names whose plan keeps its edge set cached (ROADMAP Direction 6 empties it).
-_LEAVES_CACHE = {"pagerank_trade_graph", "hits_authority_suppliers"}
-
 
 def test_registry_plans_leave_no_session_state(spark, registry_pass):
     """A plan releases the catalog state it makes: SQL-text plans hand their
     tables to ``spark.sql`` as DataFrame arguments (Spark drops those views
     before ``sql()`` returns), memory-sink views are dropped once the sink is
-    read, and re-registering a UDTF under its fixed name replaces it."""
+    read, and re-registering a UDTF under its fixed name replaces it. No
+    plan leaves a cached relation: a loop holds its sets as ``RoundState``
+    invariants, released when the loop ends."""
     from tests.registry_pass import temp_names
 
     left = {
@@ -102,7 +101,7 @@ def test_registry_plans_leave_no_session_state(spark, registry_pass):
     functions = temp_names(spark)[1]
     assert functions == _UDTF_NAMES, f"temp functions after the pass: {sorted(functions)}"
     cached = {name for name, run in registry_pass.items() if run.cached}
-    assert cached == _LEAVES_CACHE, f"cached relations left by: {sorted(cached)}"
+    assert not cached, f"cached relations left by: {sorted(cached)}"
 
 
 def test_bounded_window_allowlist_is_not_stale():
