@@ -15,7 +15,8 @@ every persistent RDD, then time building the plan from the registry plus
 its plan is built), so each run executes every shuffle stage and reuses
 nothing an earlier run left. One
 unmeasured pass over all names warms the JVM, codegen and the Python workers;
-``RUNS`` measured passes follow. A name's time is its median over the
+``RUNS`` measured passes follow, each starting one name later than the pass
+before it. A name's time is its median over the
 measured passes of wall time less the hypervisor's steal (``/proc/stat``,
 read through ``perfbench/probes.py``); ``value`` sums it over ``HEADLINE``,
 and ``cpu_s``/``stolen_s`` sum the medians of the process tree's CPU seconds
@@ -104,14 +105,17 @@ def run(
     spark, sf_dir: str, headline: list[str], tracked: list[str], runs: int
 ) -> tuple[dict, dict[str, list[dict[str, float]]]]:
     """One warm pass, then ``runs`` measured passes over ``headline + tracked``;
-    returns the record and each name's per-pass samples."""
+    returns the record and each name's per-pass samples. Pass ``i`` (the warm
+    pass is pass 0) starts at name ``i``, so a name's neighbours change from
+    pass to pass."""
     names = headline + tracked
-    for name in names:
-        time_fresh(spark, sf_dir, name)
     samples = {n: [] for n in names}
-    for _ in range(runs):
-        for name in names:
-            samples[name].append(time_fresh(spark, sf_dir, name))
+    for i in range(runs + 1):
+        k = i % len(names)
+        for name in names[k:] + names[:k]:
+            sample = time_fresh(spark, sf_dir, name)
+            if i:
+                samples[name].append(sample)
 
     def med(name: str, key: str) -> float:
         return statistics.median(s[key] for s in samples[name])

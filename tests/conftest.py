@@ -35,7 +35,10 @@ def sf_oracle() -> str:
 @pytest.fixture(scope="session")
 def registry_pass(spark, sf_smoke):
     """Every registry name built and executed once at sf0.001, with its
-    executed plan and normalized execution plans (tests/registry_pass.py)."""
+    final executed plan, its normalized execution plans and the session
+    state it left (tests/registry_pass.py). The registry-wide audits and the
+    per-query plan pins (test_plans_audit.py, test_arrow_native.py) read it
+    instead of building their queries again."""
     from tests.registry_pass import run_pass
 
     return run_pass(spark, sf_smoke)

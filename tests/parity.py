@@ -24,21 +24,24 @@ import pandas as pd
 from cbde_mapreduce_spark.sources import TABLES
 
 
-def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
+def register_views(con: duckdb.DuckDBPyConnection, sf_dir: str) -> None:
+    """One DuckDB view per fixture table of ``sf_dir``, in either layout
+    (FIXTURES.md "Table layouts"): a single file, or a directory of part
+    files as written at scale (tools_scale_gen, partitioned sinks), read
+    through a recursive glob so a hive-partitioned layout
+    (key=val/part-*.parquet) loads too. Spark's loaders handle both."""
     import os
 
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        src = f"'{p}/**/*.parquet'" if os.path.isdir(p) else f"'{p}'"
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM {src}")
+
+
+def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
     con = duckdb.connect()
     try:
-        for t in TABLES:
-            # both fixture layouts (FIXTURES.md "Table layouts"): a
-            # single file, or a directory of part files as written at scale
-            # (tools_scale_gen, partitioned sinks) — Spark's loaders handle
-            # both, so the oracle side must too. Recursive glob so a
-            # hive-partitioned layout (key=val/part-*.parquet) also loads
-            # on the oracle side, not just flat part files (ADVICE r10).
-            p = f"{sf_dir}/{t}.parquet"
-            src = f"'{p}/**/*.parquet'" if os.path.isdir(p) else f"'{p}'"
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM {src}")
+        register_views(con, sf_dir)
         return con.sql(sql).df()
     finally:
         con.close()

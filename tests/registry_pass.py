@@ -10,7 +10,8 @@ the plan was built (loop rounds, broadcast gates, BPE's vocabulary collect).
 It also keeps what the name left in the session: the temp views and temp
 functions it added and whether a relation stayed cached.
 The default tier runs the pass once at sf0.001, through the session-scoped
-``registry_pass`` fixture in ``conftest.py``.
+``registry_pass`` fixture in ``conftest.py``; the plan pins read its
+executed plans instead of building their queries again.
 
 ``PLANS.json`` maps each name to ``{"fp", "since"}``. ``fp`` hashes the
 oracle SQL text together with those normalized plans. Normalizing keeps the
@@ -20,17 +21,22 @@ it. It keeps each node's details but strips expression, plan, stage and RDD
 ids, partition counts, statistics and paths, so an ``fp`` is the same at any
 session width and in any checkout. An ``fp`` cannot see work done in driver
 Python, such as the merges BPE computes from its collected vocabulary and
-returns as a local relation, nor anything the data decides at run time, nor
-the order of the tokens within one line of a node's details (``normalize``
-sorts them).
+returns as a local relation, nor the order of the tokens within one line of
+a node's details (``normalize`` sorts them). It does see the literals the
+data decides and a plan inlines (range bounds, collected scalars), so an
+``fp`` depends on the scale: the pass runs at sf0.001, where a pass
+fingerprints the same in a pytest session as in its own process.
 ``since`` is the first driver round that should see the ``fp``:
 ``__spark_entry__`` orders a name first while ``since`` is later than its
 last green driver check.
 
-    python -m tests.registry_pass      # rewrite PLANS.json from a fresh pass
+    python -m tests.registry_pass                   # rewrite PLANS.json
+    python -m tests.registry_pass --explain NAME…   # print final executed plans
 
 Rewriting keeps ``since`` for every unchanged ``fp`` and sets it to one past
 the newest ``CORRECTNESS_r*.json`` round for each changed or new name.
+``--explain`` runs only the named queries, through the same loop, and
+changes no file.
 """
 
 from __future__ import annotations
@@ -40,6 +46,7 @@ import json
 import os
 import re
 import sys
+from collections.abc import Iterable
 from typing import NamedTuple
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -126,8 +133,8 @@ def temp_names(spark) -> tuple[set[str], set[str]]:
     )
 
 
-def run_pass(spark, sf_dir: str) -> dict[str, Run]:
-    """Build, execute and fingerprint every registry name once."""
+def run_pass(spark, sf_dir: str, names: Iterable[str] = REGISTRY) -> dict[str, Run]:
+    """Build, execute and fingerprint each of ``names`` once."""
     bus = spark.sparkContext._jsc.sc().listenerBus()
     store = spark._jsparkSession.sharedState().statusStore()
     bus.waitUntilEmpty()
@@ -135,7 +142,7 @@ def run_pass(spark, sf_dir: str) -> dict[str, Run]:
     seen = store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
     cache = spark._jsparkSession.sharedState().cacheManager()
     runs = {}
-    for name in sorted(REGISTRY):
+    for name in sorted(names):
         release(spark)
         views, fns = temp_names(spark)
         df = REGISTRY[name].fn(spark, sf_dir)
@@ -152,11 +159,35 @@ def run_pass(spark, sf_dir: str) -> dict[str, Run]:
     return runs
 
 
+def final_plan(plan: str) -> str:
+    """An executed plan up to its first ``== Initial Plan ==`` section: an
+    adaptive plan prints its final plan first."""
+    return plan.split("+- == Initial Plan ==")[0].rstrip()
+
+
+def explain(name: str, run: Run) -> str:
+    """``name``'s final executed plan under a header line."""
+    return f"== {name} ==\n{final_plan(run.plan)}"
+
+
 def main() -> None:
+    import argparse
+
     from cbde_mapreduce_spark.session import get_spark
 
+    parser = argparse.ArgumentParser(prog="python -m tests.registry_pass")
+    parser.add_argument(
+        "--explain", nargs="+", metavar="NAME", help="print these names' final plans; write no file"
+    )
+    names = parser.parse_args().explain
+    if unknown := set(names or ()) - REGISTRY.keys():
+        parser.error(f"not in the registry: {sorted(unknown)}")
     spark = get_spark(app_name="registry-pass")
     spark.sparkContext.setLogLevel("ERROR")
+    if names:
+        runs = run_pass(spark, E.SF_SMOKE, names)
+        print("\n\n".join(explain(name, runs[name]) for name in names))
+        return
     runs = run_pass(spark, E.SF_SMOKE)
     with open(PLANS) as f:
         old = json.load(f)

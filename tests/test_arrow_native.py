@@ -10,29 +10,24 @@ from __future__ import annotations
 import pandas as pd
 
 from cbde_mapreduce_spark.plans import REGISTRY
+from tests.registry_pass import final_plan
 
 SF = "/root/testdata/sf0.001"
 
 
-def _executed_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_grouped_minmax_is_arrow_native(spark):
+def test_grouped_minmax_is_arrow_native(registry_pass):
     """The group kernel must run as FlatMapGroupsInArrow (no pandas
     conversion node), fed by exactly one hash exchange on the group key."""
-    df = REGISTRY["arrow_grouped_minmax_norm"].fn(spark, SF)
-    plan = _executed_plan(df)
+    plan = final_plan(registry_pass["arrow_grouped_minmax_norm"].plan)
     assert "FlatMapGroupsInArrow" in plan
     assert "FlatMapGroupsInPandas" not in plan
     assert plan.count("Exchange") == 1
 
 
-def test_map_doc_stats_is_shuffle_free_arrow_map(spark):
+def test_map_doc_stats_is_shuffle_free_arrow_map(registry_pass):
     """mapInArrow over the scan: a pure map — zero exchanges — and the
     Arrow map node, not ArrowEvalPython (the pandas_udf path)."""
-    df = REGISTRY["arrow_map_doc_stats"].fn(spark, SF)
-    plan = _executed_plan(df)
+    plan = registry_pass["arrow_map_doc_stats"].plan
     assert "MapInArrow" in plan
     assert "Exchange" not in plan
 

@@ -32,7 +32,8 @@ def test_bench_runs_fresh_plans_and_releases_each_step(spark, sf_smoke, monkeypa
     spark.range(3).cache().count()  # state left by an earlier caller
     record, samples = bench.run(spark, sf_smoke, NAMES, [], runs=1)
 
-    assert held == [(n, False, 0) for n in NAMES * 2]  # warm pass + 1 measured
+    # the warm pass, then 1 measured pass starting at the second name
+    assert held == [(n, False, 0) for n in NAMES + NAMES[1:] + NAMES[:1]]
     line = json.dumps(record)
     assert len(line) < 1900
     assert {"value", "cpu_s", "queries"} <= record.keys()

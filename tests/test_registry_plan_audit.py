@@ -1,6 +1,6 @@
 """Registry-WIDE physical-plan anti-pattern gates.
 
-tests/test_plans_audit.py asserts the right plan for ~60 named queries;
+tests/test_plans_audit.py asserts the right plan for 54 named queries;
 these tests instead sweep the ENTIRE registry so a scale anti-pattern
 cannot slip in through any future query:
 
@@ -17,7 +17,9 @@ cannot slip in through any future query:
    Arrow-vectorized forms (pandas_udf / mapInPandas / applyInPandas /
    cogroup / UDTF) are allowed on the Python path.
 
-The plan checks read one registry pass (``tests/registry_pass.py``).
+The plan checks read one registry pass (``tests/registry_pass.py``), the
+session-scoped ``registry_pass`` fixture that the named plan pins read too;
+one more test checks what ``python -m tests.registry_pass --explain`` prints.
 """
 
 from __future__ import annotations
@@ -77,6 +79,16 @@ def test_plan_fingerprints_match_plans_json(registry_pass):
     fps = {name: run.fp(name) for name, run in registry_pass.items()}
     differ = sorted(n for n in fps.keys() | committed.keys() if fps.get(n) != committed.get(n))
     assert not differ, f"plans differ from PLANS.json (python -m tests.registry_pass): {differ}"
+
+
+def test_explain_prints_the_final_executed_plan(registry_pass):
+    """``--explain`` prints a name's final plan, not the adaptive plan's
+    initial one."""
+    from tests.registry_pass import explain
+
+    text = explain("q1_pricing_summary", registry_pass["q1_pricing_summary"])
+    assert text.startswith("== q1_pricing_summary ==\n")
+    assert "HashAggregate" in text and "== Initial Plan ==" not in text
 
 
 #: The Python UDTFs the registry registers, each under one fixed name.

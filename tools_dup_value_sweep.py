@@ -31,16 +31,11 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tes
 
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else ".scratch/dup20"
-    from pyspark.sql import SparkSession
+    from cbde_mapreduce_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        # replicated corpora grow the heaviest collect/build sides with the
-        # replica count; the 1g default driver heap OOMed at r23 (round 11)
-        .config("spark.driver.memory", "12g")
-        .getOrCreate()
-    )
+    # get_spark's 12g driver heap: replicated corpora grow the heaviest
+    # collect/build sides with the replica count (a 1g heap OOMed)
+    spark = get_spark(app_name="dup-value-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     from parity import assert_parity
 

@@ -45,16 +45,13 @@ def time_duckdb(sf_dir: str, name: str) -> float:
     import duckdb
 
     from cbde_mapreduce_spark.plans import REGISTRY
-    from cbde_mapreduce_spark.sources import TABLES
+    from tests.parity import register_views
 
     sql = REGISTRY[name].oracle
     if sql is None:
         raise SystemExit(f"{name} has no oracle SQL")
     con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        src = f"'{p}/*.parquet'" if os.path.isdir(p) else f"'{p}'"
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM {src}")
+    register_views(con, sf_dir)
     samples = []
     for i in range(RUNS + 1):
         t0 = time.perf_counter()
